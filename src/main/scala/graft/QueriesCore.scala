@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Fns
+import graft.streaming.StreamRun
 import graft.operators.Relational
 
 /** Core relational query surface — one named query per operator family of
@@ -591,20 +592,11 @@ object QueriesCore {
   /** Lower AQE skew thresholds to bench scale + disable broadcast, run
     * `body`, restore every touched conf (set-or-unset faithfully).
     * Shared with AqeSkewSpec so the spec asserts against exactly the
-    * confs the declared query runs under.
-    *
-    * SINGLE-THREADED CONTRACT (shared with [[QueriesStats.narrow]]):
-    * the set/restore toggles the session-GLOBAL SQL conf, so any query
-    * planned concurrently on the same SparkSession during the window
-    * inherits the lowered thresholds. The bench/verify harness runs
-    * queries strictly sequentially, and restoration is exact even on
-    * exception (set-or-unset in the finally) — but a server-style
-    * shared-session caller must wrap the call in its own
-    * `SparkSession.newSession()` (cheap: shares the SparkContext,
-    * isolates the conf) before invoking these queries in parallel.
+    * confs the declared query runs under. Scoped by [[Confs.scoped]]
+    * (see its single-threaded contract).
     */
-  def withSkewSplitConfs[T](s: SparkSession)(body: => T): T = {
-    val lowered = Map(
+  def withSkewSplitConfs[T](s: SparkSession)(body: => T): T =
+    Confs.scoped(s,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
       // key 0 carries ~25% of lineitem. Sizes here are COMPRESSED
@@ -627,15 +619,7 @@ object QueriesCore {
       // [86,101,86,90] KB at 4 partitions — ratio 1.15, no trip). 32
       // partitions spread the tail thin so the hot partition stands
       // ~9× over median — the shape a 100 TB shuffle actually has
-      "spark.sql.shuffle.partitions" -> "32")
-    val saved = lowered.keys.map(k => k -> s.conf.getOption(k)).toMap
-    try {
-      lowered.foreach { case (k, v) => s.conf.set(k, v) }
-      body
-    } finally saved.foreach { case (k, v) =>
-      v.fold(s.conf.unset(k))(s.conf.set(k, _))
-    }
-  }
+      "spark.sql.shuffle.partitions" -> "32")(body)
 
   /** Deterministic 80/10/10 train/val/test split by content hash
     * ([[graft.operators.Scale.hashSplit]]) — reproducible across runs,
@@ -865,11 +849,10 @@ object QueriesCore {
     * so sums are order-independent (the oracle-parity rule).
     */
   def q93StreamWindowCounts(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // ts is re-written AS READ (nanos-long or micros-timestamp —
     // whatever the testdata generation encodes); readEvents below
     // infers the on-disk shape from the footer and normalizes.
-    val raw = s.read.parquet(s"$dir/events.parquet")
+    val raw = Tables.eventsRaw(s, s"$dir/events.parquet")
     val root = java.nio.file.Files.createTempDirectory("q93-stream").toString
     val src = s"$root/src"
     // slice renders are memoized once per process (round 19,
@@ -887,30 +870,15 @@ object QueriesCore {
     val stream = graft.streaming.EventsStream
       .readEvents(s, src, maxFilesPerTrigger = Some(1))
       .withColumn("value", col("value").cast("decimal(18,2)"))
-    // state-store partitioning: each micro-batch commits one store per
-    // (shuffle partition × stateful operator); at the session's 32
-    // partitions that is 32×2×4 = 256 store commits whose FIXED cost
-    // dominated the measurement (isolated: ~10.8 s at 32 partitions vs
-    // ~4 s at 4). Partition count should track state cardinality —
-    // 100k dedup keys at bench scale fit 4 partitions; a 100 TB stream
-    // sizes this UP with the key space, it is the same knob. Scoped
-    // conf, restored in finally (the q73 discipline).
-    try {
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        graft.streaming.EventsStream.windowedCounts(stream,
-            // 1-hour windows keep the complete-mode rescan small; the
-            // dedup/watermark machinery under test is window-length
-            // independent
-            watermark = "87840 minutes", windowLen = "1 hour")
-          .writeStream.outputMode("complete").format("memory").queryName(name)
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      q.processAllAvailable()
-      q.stop()
-      val out = s.table(name)
-        .select(col("window.start").cast("timestamp_ntz").as("window_start"),
+    try StreamRun.toMemory(s, name) {
+      graft.streaming.EventsStream.windowedCounts(stream,
+          // 1-hour windows keep the complete-mode rescan small; the
+          // dedup/watermark machinery under test is window-length
+          // independent
+          watermark = "87840 minutes", windowLen = "1 hour")
+        .writeStream.outputMode("complete")
+    } {
+      _.select(col("window.start").cast("timestamp_ntz").as("window_start"),
           col("event_type"), col("n"),
           // exact decimal sum upstream; ONE shared decimal→double cast
           // at the very end (the q01 oracle-parity pattern)
@@ -918,8 +886,6 @@ object QueriesCore {
             .as("total_value"))
         .orderBy("window_start", "event_type")
         .localCheckpoint(true) // materialize before the finally deletes
-      s.catalog.dropTempView(name)
-      out
     } finally TmpTrees.delete(root)
   }
 
@@ -1026,30 +992,21 @@ object QueriesCore {
     }
     val name = java.nio.file.Paths.get(root).getFileName.toString
       .replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      // state-store partitioning sized to key cardinality, scoped and
-      // restored — the q93/q73 discipline.
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val events = graft.streaming.EventsStream
-          .readEvents(s, src, maxFilesPerTrigger = Some(1))
-          .select(col("event_id"), col("ts"), col("user_id"),
-            col("event_type"), col("value"))
-          .as(org.apache.spark.sql.Encoders
-            .product[graft.streaming.EventsStream.Event])
-        graft.streaming.EventsStream.sessionize(events, gapMinutes = 30)
-          .toDF()
-          .writeStream.outputMode("update").format("memory")
-          .queryName(name).start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      q.processAllAvailable()
-      q.stop()
+    try StreamRun.toMemory(s, name) {
+      val events = graft.streaming.EventsStream
+        .readEvents(s, src, maxFilesPerTrigger = Some(1))
+        .select(col("event_id"), col("ts"), col("user_id"),
+          col("event_type"), col("value"))
+        .as(org.apache.spark.sql.Encoders
+          .product[graft.streaming.EventsStream.Event])
+      graft.streaming.EventsStream.sessionize(events, gapMinutes = 30)
+        .toDF()
+        .writeStream.outputMode("update")
+    } {
       // Update-mode log → final sessions: a closed session's terminal
       // emission carries its max n_events (ties broken closed-first;
       // stats at equal n are identical by construction).
-      val out = s.table(name)
-        .groupBy(col("user_id"), col("session_start"))
+      _.groupBy(col("user_id"), col("session_start"))
         .agg(max(struct(col("n_events"), col("closed"),
           col("total_value"))).as("m"))
         .select(col("user_id"),
@@ -1058,8 +1015,6 @@ object QueriesCore {
           (col("m.total_value") / 100).as("total_value"))
         .orderBy("user_id", "session_start")
         .localCheckpoint(true) // materialize before the finally deletes
-      s.catalog.dropTempView(name)
-      out
     } finally TmpTrees.delete(root)
   }
 
@@ -1167,23 +1122,16 @@ object QueriesCore {
     }
     val name = java.nio.file.Paths.get(root).getFileName.toString
       .replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val occ = s.readStream.schema(s.read.parquet(src).schema)
-          .option("maxFilesPerTrigger", 1).parquet(src)
-          .as(org.apache.spark.sql.Encoders
-            .product[graft.streaming.ErrorsStream.ErrOccurrence])
-        graft.streaming.ErrorsStream.accumulate(occ)
-          .toDF()
-          .writeStream.outputMode("update").format("memory")
-          .queryName(name).start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      q.processAllAvailable()
-      q.stop()
-      val out = s.table(name)
-        .groupBy(col("error_id"))
+    try StreamRun.toMemory(s, name) {
+      val occ = s.readStream.schema(s.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", 1).parquet(src)
+        .as(org.apache.spark.sql.Encoders
+          .product[graft.streaming.ErrorsStream.ErrOccurrence])
+      graft.streaming.ErrorsStream.accumulate(occ)
+        .toDF()
+        .writeStream.outputMode("update")
+    } {
+      _.groupBy(col("error_id"))
         .agg(max(struct(col("count"), col("first_seen"),
           col("last_seen"))).as("m"))
         .select(col("error_id"), col("m.count").as("n"),
@@ -1191,8 +1139,6 @@ object QueriesCore {
           col("m.last_seen").cast("timestamp_ntz").as("last_seen"))
         .orderBy("error_id")
         .localCheckpoint(true) // materialize before the finally deletes
-      s.catalog.dropTempView(name)
-      out
     } finally TmpTrees.delete(root)
   }
 
@@ -1269,39 +1215,28 @@ object QueriesCore {
     }
     val name = java.nio.file.Paths.get(root).getFileName.toString
       .replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val onDisk = {
-          s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          s.read.parquet(src).schema // one footer read for both sources
-        }
-        def read() = graft.streaming.EventsStream.readEvents(s, src,
-          maxFilesPerTrigger = Some(1), schemaHint = Some(onDisk))
-        val errors = read().filter(col("event_type") === "error")
-          .select(col("user_id"), col("event_id").as("error_id"),
-            col("ts").as("ets"))
-          .withWatermark("ets", "87840 minutes")
-        val purchases = read().filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_user_id"),
-            col("event_id").as("purchase_id"), col("ts").as("pts"))
-          .withWatermark("pts", "87840 minutes")
-        errors.join(purchases,
-            col("user_id") === col("p_user_id") &&
-              col("ets") >= col("pts") &&
-              col("ets") < col("pts") + expr("INTERVAL 2 HOURS"))
-          .select(col("user_id"), col("error_id"), col("purchase_id"))
-          .writeStream.outputMode("append").format("memory")
-          .queryName(name).start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      q.processAllAvailable()
-      q.stop()
-      val out = s.table(name)
-        .orderBy("user_id", "error_id", "purchase_id")
+    try StreamRun.toMemory(s, name) {
+      // one footer read for both sources
+      val onDisk = Tables.eventsRaw(s, src).schema
+      def read() = graft.streaming.EventsStream.readEvents(s, src,
+        maxFilesPerTrigger = Some(1), schemaHint = Some(onDisk))
+      val errors = read().filter(col("event_type") === "error")
+        .select(col("user_id"), col("event_id").as("error_id"),
+          col("ts").as("ets"))
+        .withWatermark("ets", "87840 minutes")
+      val purchases = read().filter(col("event_type") === "purchase")
+        .select(col("user_id").as("p_user_id"),
+          col("event_id").as("purchase_id"), col("ts").as("pts"))
+        .withWatermark("pts", "87840 minutes")
+      errors.join(purchases,
+          col("user_id") === col("p_user_id") &&
+            col("ets") >= col("pts") &&
+            col("ets") < col("pts") + expr("INTERVAL 2 HOURS"))
+        .select(col("user_id"), col("error_id"), col("purchase_id"))
+        .writeStream.outputMode("append")
+    } {
+      _.orderBy("user_id", "error_id", "purchase_id")
         .localCheckpoint(true) // materialize before the finally deletes
-      s.catalog.dropTempView(name)
-      out
     } finally TmpTrees.delete(root)
   }
 
@@ -1460,28 +1395,21 @@ object QueriesCore {
     }
     val name = java.nio.file.Paths.get(root).getFileName.toString
       .replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        graft.streaming.EventsStream
-          .readEvents(s, src, maxFilesPerTrigger = Some(1))
-          .withColumn("value", col("value").cast("decimal(18,2)"))
-          .join(broadcast(tiers), "user_id")
-          .groupBy(col("tier"), col("event_type"))
-          .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
-          .writeStream.outputMode("complete").format("memory")
-          .queryName(name).start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      q.processAllAvailable()
-      q.stop()
-      val out = s.table(name)
+    try StreamRun.toMemory(s, name) {
+      graft.streaming.EventsStream
+        .readEvents(s, src, maxFilesPerTrigger = Some(1))
+        .withColumn("value", col("value").cast("decimal(18,2)"))
+        .join(broadcast(tiers), "user_id")
+        .groupBy(col("tier"), col("event_type"))
+        .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
+        .writeStream.outputMode("complete")
+    } { t =>
+      val out = t
         .select(col("tier"), col("event_type"), col("n"),
           col("total").cast("decimal(18,2)").cast("double")
             .as("total_value"))
         .orderBy("tier", "event_type")
         .localCheckpoint(true) // materialize before the finally deletes
-      s.catalog.dropTempView(name)
       graft.operators.Checkpoints.drop(tiers) // dim blocks are dead now
       out
     } finally TmpTrees.delete(root)
@@ -1550,9 +1478,7 @@ object QueriesCore {
         .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
         .option("path", s"$root/lineitem").mode("overwrite")
         .saveAsTable(tLine)
-      val prevBc = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try Confs.scoped(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val j = s.table(tLine)
           .join(s.table(tOrders),
             col("l_orderkey") === col("o_orderkey"))
@@ -1573,7 +1499,6 @@ object QueriesCore {
             s"scans):\n$plan")
         j.localCheckpoint(true) // materialize before tables drop
       } finally {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
         s.sql(s"DROP TABLE IF EXISTS $tOrders")
         s.sql(s"DROP TABLE IF EXISTS $tLine")
       }
@@ -2039,32 +1964,19 @@ object QueriesCore {
     }
     val name = java.nio.file.Paths.get(root).getFileName.toString
       .replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val onDisk = {
-          s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          s.read.parquet(src).schema
-        }
-        graft.streaming.EventsStream.readEvents(s, src,
-            maxFilesPerTrigger = Some(1), schemaHint = Some(onDisk))
-          .join(broadcast(dim), col("user_id") === col("c_custkey"))
-          .select(col("user_id"), col("event_id"), col("event_type"),
-            col("c_mktsegment"))
-          .writeStream.outputMode("append").format("memory")
-          .queryName(name).start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      q.processAllAvailable()
-      q.stop()
-      val out = s.table(name)
-        .groupBy("c_mktsegment", "event_type")
+    try StreamRun.toMemory(s, name) {
+      graft.streaming.EventsStream
+        .readEvents(s, src, maxFilesPerTrigger = Some(1))
+        .join(broadcast(dim), col("user_id") === col("c_custkey"))
+        .select(col("user_id"), col("event_id"), col("event_type"),
+          col("c_mktsegment"))
+        .writeStream.outputMode("append")
+    } {
+      _.groupBy("c_mktsegment", "event_type")
         .agg(count(lit(1)).cast("bigint").as("n_events"),
           countDistinct(col("user_id")).cast("bigint").as("n_users"))
         .orderBy("c_mktsegment", "event_type")
         .localCheckpoint(true) // materialize before the finally deletes
-      s.catalog.dropTempView(name)
-      out
     } finally TmpTrees.delete(root)
   }
 
@@ -2731,29 +2643,22 @@ object QueriesCore {
     }
     val name = java.nio.file.Paths.get(root).getFileName.toString
       .replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        graft.streaming.EventsStream
-          .readEvents(s, src, maxFilesPerTrigger = Some(1))
-          .select(col("event_type"),
-            graft.operators.Scale.md5Prefix32(col("user_id")).as("__h"))
-          .select(col("event_type"),
-            pmod(col("__h"), lit(64)).cast("int").as("bucket"),
-            expr("CAST(__h DIV 64 AS BIGINT)").as("__rest"))
-          .select(col("event_type"), col("bucket"),
-            when(col("__rest") === 0L, lit(27L))
-              .otherwise(lit(27L) - length(bin(col("__rest"))))
-              .as("__rho"))
-          .groupBy("event_type", "bucket")
-          .agg(max(col("__rho")).as("register"))
-          .writeStream.outputMode("complete").format("memory")
-          .queryName(name).start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      q.processAllAvailable()
-      q.stop()
-      val regs = s.table(name)
+    try StreamRun.toMemory(s, name) {
+      graft.streaming.EventsStream
+        .readEvents(s, src, maxFilesPerTrigger = Some(1))
+        .select(col("event_type"),
+          graft.operators.Scale.md5Prefix32(col("user_id")).as("__h"))
+        .select(col("event_type"),
+          pmod(col("__h"), lit(64)).cast("int").as("bucket"),
+          expr("CAST(__h DIV 64 AS BIGINT)").as("__rest"))
+        .select(col("event_type"), col("bucket"),
+          when(col("__rest") === 0L, lit(27L))
+            .otherwise(lit(27L) - length(bin(col("__rest"))))
+            .as("__rho"))
+        .groupBy("event_type", "bucket")
+        .agg(max(col("__rho")).as("register"))
+        .writeStream.outputMode("complete")
+    } { regs =>
       val spine = ev.select("event_type").distinct()
         .crossJoin(s.range(0, 64).select(col("id").cast("int").as("bucket")))
       val full = spine.join(regs, Seq("event_type", "bucket"), "left")
@@ -2782,7 +2687,6 @@ object QueriesCore {
             .cast("bigint").as("est_micros"))
         .orderBy("event_type", "bucket")
         .localCheckpoint(true) // materialize before the finally deletes
-      s.catalog.dropTempView(name)
       out
     } finally TmpTrees.delete(root)
   }
@@ -2930,11 +2834,7 @@ object QueriesCore {
     // are tiny relative to the cluster (≤ |pairs| rows): per-round
     // task-launch fixed costs at 32 shuffle partitions dominate, so
     // run the whole composition narrow (q52/q168's pattern)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      q274DbscanBody(s, dir, eps)
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    Confs.scoped(s, Confs.narrow(s, 8)) { q274DbscanBody(s, dir, eps) }
   }
 
   private def q274DbscanBody(s: SparkSession, dir: String,
@@ -2959,10 +2859,8 @@ object QueriesCore {
   def q275WeightedPaths(s: SparkSession, dir: String): DataFrame = {
     val eps = 1000L
     val rounds = 6
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      // small per-round frames: run narrow (q274's rationale)
-      s.conf.set("spark.sql.shuffle.partitions", "8")
+    // small per-round frames: run narrow (q274's rationale)
+    Confs.scoped(s, Confs.narrow(s, 8)) {
       val pts = adaptiveGridPoints(Tables.customer(s, dir)
         .select(col("c_custkey").as("id")))
       val pr = gridRadiusPairs(pts, r = eps)
@@ -2985,7 +2883,7 @@ object QueriesCore {
       dist.select(col("id").cast("bigint").as("id"),
           col("cost").cast("bigint").as("min_cost"))
         .orderBy("id")
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** q274's engine parametrized on the point-id set, so the scale
@@ -3390,27 +3288,15 @@ object QueriesCore {
     }
     val name = java.nio.file.Paths.get(root).getFileName.toString
       .replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val onDisk = {
-          s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          s.read.parquet(src).schema
-        }
-        graft.streaming.EventsStream.readEvents(s, src,
-            maxFilesPerTrigger = Some(1), schemaHint = Some(onDisk))
-          .groupBy(col("ts").cast("date").as("day"))
-          .agg(count(lit(1)).as("n"))
-          .writeStream.outputMode("complete").format("memory")
-          .queryName(name).start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      q.processAllAvailable()
-      q.stop()
-      val out = cusumOverDaily(s.table(name))
+    try StreamRun.toMemory(s, name) {
+      graft.streaming.EventsStream
+        .readEvents(s, src, maxFilesPerTrigger = Some(1))
+        .groupBy(col("ts").cast("date").as("day"))
+        .agg(count(lit(1)).as("n"))
+        .writeStream.outputMode("complete")
+    } {
+      cusumOverDaily(_)
         .localCheckpoint(true) // materialize before the finally deletes
-      s.catalog.dropTempView(name)
-      out
     } finally TmpTrees.delete(root)
   }
 
@@ -4036,24 +3922,17 @@ object QueriesCore {
     }
     val name = java.nio.file.Paths.get(root).getFileName.toString
       .replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        graft.streaming.EventsStream
-          .readEvents(s, src, maxFilesPerTrigger = Some(1))
-          .withColumn("__v", col("value").cast("decimal(18,2)"))
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"), sum(col("__v")).as("total"),
-            min(col("value")).as("min_value"),
-            max(col("value")).as("max_value"))
-          .writeStream.outputMode("complete").format("memory")
-          .queryName(name).start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      q.processAllAvailable()
-      q.stop()
-      val out = s.table(name)
-        .select(col("event_type"), col("n").cast("bigint").as("n"),
+    try StreamRun.toMemory(s, name) {
+      graft.streaming.EventsStream
+        .readEvents(s, src, maxFilesPerTrigger = Some(1))
+        .withColumn("__v", col("value").cast("decimal(18,2)"))
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"), sum(col("__v")).as("total"),
+          min(col("value")).as("min_value"),
+          max(col("value")).as("max_value"))
+        .writeStream.outputMode("complete")
+    } {
+      _.select(col("event_type"), col("n").cast("bigint").as("n"),
           col("total").cast("decimal(18,2)").cast("double")
             .as("total_value"),
           col("min_value"), col("max_value"),
@@ -4061,8 +3940,6 @@ object QueriesCore {
             .as("avg_value"))
         .orderBy("event_type")
         .localCheckpoint(true) // materialize before the finally deletes
-      s.catalog.dropTempView(name)
-      out
     } finally TmpTrees.delete(root)
   }
 
@@ -5887,25 +5764,18 @@ object QueriesCore {
     }
     val name = java.nio.file.Paths.get(root).getFileName.toString
       .replaceAll("[^A-Za-z0-9_]", "_")
-    try {
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val events = graft.streaming.EventsStream
-          .readEvents(s, src, maxFilesPerTrigger = Some(1))
-          .select(col("event_id"), col("ts"), col("user_id"),
-            col("event_type"), col("value"))
-          .as(org.apache.spark.sql.Encoders
-            .product[graft.streaming.EventsStream.Event])
-        graft.streaming.TwapStream.intervals(events)
-          .toDF()
-          .writeStream.outputMode("append").format("memory")
-          .queryName(name).start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      q.processAllAvailable()
-      q.stop()
-      val out = s.table(name)
-        .groupBy("user_id")
+    try StreamRun.toMemory(s, name) {
+      val events = graft.streaming.EventsStream
+        .readEvents(s, src, maxFilesPerTrigger = Some(1))
+        .select(col("event_id"), col("ts"), col("user_id"),
+          col("event_type"), col("value"))
+        .as(org.apache.spark.sql.Encoders
+          .product[graft.streaming.EventsStream.Event])
+      graft.streaming.TwapStream.intervals(events)
+        .toDF()
+        .writeStream.outputMode("append")
+    } {
+      _.groupBy("user_id")
         .agg(count(lit(1)).as("n_intervals"),
           sum(col("dt_micros")).as("__den"),
           sum(col("v_micros").cast("decimal(38,0)") * col("dt_micros"))
@@ -5916,8 +5786,6 @@ object QueriesCore {
           expr("CAST(__num DIV __den AS BIGINT)").as("twap_micros"))
         .orderBy("user_id")
         .localCheckpoint(true)
-      s.catalog.dropTempView(name)
-      out
     } finally TmpTrees.delete(root)
   }
 

@@ -146,39 +146,27 @@ object QueriesCycle {
       FeedMemo.partFile(memoDir)
   }
 
-  /** The QueriesStats.narrow template: the cycle's frames are tiny
-    * keyed cascades (thousands of rows at bench sf), so 32-wide
-    * shuffles pay pure scheduling; width scales off the session conf
-    * so a wider session still gets proportional parallelism.
+  /** [[Confs.narrow]]: the cycle's frames are tiny keyed cascades
+    * (thousands of rows at bench sf), so 32-wide shuffles pay pure
+    * scheduling; width scales off the session conf so a wider session
+    * still gets proportional parallelism.
+    *
+    * Also pins unionOutputPartitioning off inside the scope (our own
+    * sessions disable it globally — see Verify.scala — but the gates
+    * must survive a FOREIGN session too): the cycle's co-partitioned
+    * family unions trigger the invalid union-partitioning claim.
+    *
+    * NOTE (round 20): a 64 MB autoBroadcastJoinThreshold inside this
+    * scope was re-tested under the real bench protocol after the par
+    * restructure (an in-JVM CycleProbe warm sequence suggested
+    * 4.25 → 3.6 s) and measured DECISIVELY worse — family 35.9 →
+    * 63.9 s isolated, q342 4.22 → 11.45 — consistent with r19's
+    * sequential-cycle measurement of the same knob. Reverted twice
+    * now; do not re-try without a real-protocol win.
     */
-  private def narrowed[T](s: SparkSession, n: Int)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    val conf = scala.util.Try(prev.toInt).getOrElse(32)
-    val scaled = math.max(n, conf * n / 32)
-    // also pin unionOutputPartitioning off inside the scope (our own
-    // sessions disable it globally — see Verify.scala — but the gates
-    // must survive a FOREIGN session too): the cycle's co-partitioned
-    // family unions trigger the invalid union-partitioning claim
-    val prevU = s.conf.getOption("spark.sql.unionOutputPartitioning")
-    // NOTE (round 20): a 64 MB autoBroadcastJoinThreshold inside this
-    // scope was re-tested under the real bench protocol after the par
-    // restructure (an in-JVM CycleProbe warm sequence suggested
-    // 4.25 → 3.6 s) and measured DECISIVELY worse — family 35.9 →
-    // 63.9 s isolated, q342 4.22 → 11.45 — consistent with r19's
-    // sequential-cycle measurement of the same knob. Reverted twice
-    // now; do not re-try without a real-protocol win.
-    try {
-      s.conf.set("spark.sql.shuffle.partitions", scaled.toString)
-      s.conf.set("spark.sql.unionOutputPartitioning", "false")
-      body
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      prevU match {
-        case Some(v) => s.conf.set("spark.sql.unionOutputPartitioning", v)
-        case None => s.conf.unset("spark.sql.unionOutputPartitioning")
-      }
-    }
-  }
+  private def narrowed[T](s: SparkSession, n: Int)(body: => T): T =
+    Confs.scoped(s, Confs.narrow(s, n),
+      "spark.sql.unionOutputPartitioning" -> "false")(body)
 
   /** All cycle inputs, derived from the standard tables. `custMod` /
     * `ordsMod` slice the world (c % custMod == 0 customers+suppliers,

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.streaming.StreamRun
 
 /** Round-15 continuation waves — graph analytics (LPA communities,
   * local clustering, HITS), rank/robust statistics (Mann–Whitney,
@@ -22,31 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object QueriesStats {
   type Q = (SparkSession, String) => DataFrame
-
-  /** Per-round frames in the iterative graph queries are tiny relative
-    * to the cluster; full-width shuffles pay pure task-launch fixed
-    * costs (q274's measured rationale). The width is CONF-PROPORTIONAL
-    * (n at the 32-partition bench ratio, scaling with the session
-    * conf), not an absolute: a production session running thousands of
-    * shuffle partitions keeps n/32 of them, never a hard-coded 8.
-    *
-    * SINGLE-THREADED CONTRACT (shared with
-    * [[QueriesCore.withSkewSplitConfs]]): the set/restore toggles the
-    * session-GLOBAL shuffle-partition conf — a query planned
-    * concurrently on the same SparkSession during the window inherits
-    * the narrowed width. Safe under the sequential bench/verify
-    * harness (restore is exact even on exception); shared-session
-    * callers must isolate via `SparkSession.newSession()` before
-    * running these queries in parallel.
-    */
-  private def narrow[T](s: SparkSession, n: Int)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    val conf = scala.util.Try(prev.toInt).getOrElse(32)
-    val scaled = math.max(n, conf * n / 32)
-    try {
-      s.conf.set("spark.sql.shuffle.partitions", scaled.toString); body
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
 
   /** Type-1 quantile locator over a cumulative ladder: TRUE exactly on
     * the ladder row whose count bucket covers 1-based rank `k` (the
@@ -70,7 +46,7 @@ object QueriesStats {
     * are labeled by propagated customer ids (exact BIGINTs).
     */
   def q276LabelPropagation(s: SparkSession, dir: String): DataFrame =
-    narrow(s, 8) {
+    Confs.scoped(s, Confs.narrow(s, 8)) {
       lpaFrom(Tables.customer(s, dir).select(col("c_custkey").as("id")))
     }
 
@@ -119,7 +95,7 @@ object QueriesStats {
     * per-node structural metric.
     */
   def q277LocalClustering(s: SparkSession, dir: String): DataFrame =
-    narrow(s, 8) {
+    Confs.scoped(s, Confs.narrow(s, 8)) {
       localClusteringFrom(
         Tables.customer(s, dir).select(col("c_custkey").as("id")))
     }
@@ -333,7 +309,7 @@ object QueriesStats {
           ev.filter(pmod(col("event_id"), lit(3)) === r)
         }
       }
-      val q = narrow(s, 4) {
+      StreamRun.toMemory(s, name) {
         graft.streaming.EventsStream
           .readEvents(s, src, maxFilesPerTrigger = Some(1))
           .select(key(col("event_type"), col("user_id")).as("__k"))
@@ -341,37 +317,27 @@ object QueriesStats {
             col("__k"))
           .select(col("__j"), cell(col("__j"), col("__k")).as("__c"))
           .groupBy("__j", "__c").agg(count(lit(1)).as("__n"))
-          .writeStream.outputMode("complete").format("memory")
-          .queryName(name).start()
+          .writeStream.outputMode("complete")
+      } { counters =>
+        val exact = ev.select(key(col("event_type"), col("user_id"))
+            .as("cms_key"))
+          .groupBy("cms_key").agg(count(lit(1)).as("exact_count"))
+        exact
+          .select(col("cms_key"), col("exact_count"),
+            explode(sequence(lit(0), lit(d - 1))).as("__j"))
+          .withColumn("__c", cell(col("__j"), col("cms_key")))
+          .join(broadcast(counters), Seq("__j", "__c"))
+          .groupBy("cms_key", "exact_count")
+          .agg(min(col("__n")).as("est_count"))
+          .select(col("cms_key"),
+            col("est_count").cast("bigint").as("est_count"),
+            col("exact_count").cast("bigint").as("exact_count"),
+            (col("est_count") >= col("exact_count")).as("sound"))
+          .orderBy(col("est_count").desc, col("cms_key"))
+          .limit(100)
+          .localCheckpoint(true) // materialize before the finally deletes
       }
-      // stop in a finally: a drain failure must not leave a live query
-      // firing against the source dir the outer finally deletes
-      try q.processAllAvailable() finally q.stop()
-      val counters = s.table(name)
-      val exact = ev.select(key(col("event_type"), col("user_id"))
-          .as("cms_key"))
-        .groupBy("cms_key").agg(count(lit(1)).as("exact_count"))
-      val out = exact
-        .select(col("cms_key"), col("exact_count"),
-          explode(sequence(lit(0), lit(d - 1))).as("__j"))
-        .withColumn("__c", cell(col("__j"), col("cms_key")))
-        .join(broadcast(counters), Seq("__j", "__c"))
-        .groupBy("cms_key", "exact_count")
-        .agg(min(col("__n")).as("est_count"))
-        .select(col("cms_key"),
-          col("est_count").cast("bigint").as("est_count"),
-          col("exact_count").cast("bigint").as("exact_count"),
-          (col("est_count") >= col("exact_count")).as("sound"))
-        .orderBy(col("est_count").desc, col("cms_key"))
-        .limit(100)
-        .localCheckpoint(true) // materialize before the finally deletes
-      out
-    } finally {
-      // the memory-sink view must not outlive the query even when the
-      // drain or the final materialization throws
-      s.catalog.dropTempView(name)
-      TmpTrees.delete(root)
-    }
+    } finally TmpTrees.delete(root)
   }
 
   /** FORECAST BACKTEST — seasonal-naive (ŷ_w = y_{w−52 weeks}) over
@@ -618,7 +584,7 @@ object QueriesStats {
           ev.filter(pmod(col("event_id"), lit(3)) === r)
         }
       }
-      val q = narrow(s, 4) {
+      StreamRun.toMemory(s, name) {
         graft.streaming.EventsStream
           .readEvents(s, src, maxFilesPerTrigger = Some(1))
           .select(explode(sequence(lit(0), lit(k - 1))).as("__j"),
@@ -628,62 +594,53 @@ object QueriesStats {
             expr("shiftleft(CAST(1 AS BIGINT), CAST(__p % 32 AS INT))")
               .as("__m"))
           .groupBy("word_idx").agg(expr("bit_or(__m)").as("bits"))
-          .writeStream.outputMode("complete").format("memory")
-          .queryName(name).start()
+          .writeStream.outputMode("complete")
+      } { t =>
+        val words = t.localCheckpoint()
+        val members = ev.select(col("user_id").as("probe")).distinct()
+          .withColumn("kind", lit("member"))
+        // synthetic absent population: offset every member id by
+        // max(user_id)+1 — COMPUTED, so the populations are provably
+        // disjoint in any id domain (min absent = max+1+min > max). The
+        // round-15 literal +1e9 offset was only disjoint while ids
+        // stayed below 1e9 — at the 100 TB id scale an "absent" probe
+        // could be a real member, silently inflating the measured
+        // false-positive rate with the oracle agreeing (same literal).
+        val mx = ev.agg(max(col("user_id")).as("__mx"))
+        val absent = members.crossJoin(broadcast(mx)).select(
+            (col("probe") + col("__mx") + lit(1L)).as("probe"),
+            lit("absent").as("kind"))
+        val probes = members.unionByName(absent)
+          .select(col("kind"), col("probe"),
+            explode(sequence(lit(0), lit(k - 1))).as("__j"))
+          .withColumn("__p", bitpos(col("__j"), col("probe")))
+          .withColumn("word_idx", expr("__p DIV 32"))
+          .withColumn("__m",
+            expr("shiftleft(CAST(1 AS BIGINT), CAST(__p % 32 AS INT))"))
+          // LEFT join with a 0-word default: a probe hashing into a
+          // never-set word must test NEGATIVE, not vanish (an inner join
+          // silently dropped one sparse-filter probe at sf0.001)
+          .join(broadcast(words), Seq("word_idx"), "left")
+          .withColumn("__b", coalesce(col("bits"), lit(0L)))
+          .groupBy("kind", "probe")
+          .agg(min((col("__b").bitwiseAND(col("__m")) === col("__m"))
+            .cast("int")).as("__hit"))
+        val popcount = words
+          .agg(sum(expr("bit_count(bits)")).as("bits_set"))
+        probes.groupBy("kind")
+          .agg(count(lit(1)).as("n_probes"),
+            sum(col("__hit")).as("n_positive"))
+          .crossJoin(broadcast(popcount))
+          .select(col("kind"),
+            col("n_probes").cast("bigint").as("n_probes"),
+            col("n_positive").cast("bigint").as("n_positive"),
+            expr("""CAST((CAST(n_positive AS DECIMAL(38,0)) * 1000000)
+                    DIV n_probes AS BIGINT)""").as("positive_ppm"),
+            col("bits_set").cast("bigint").as("bits_set"))
+          .orderBy("kind")
+          .localCheckpoint(true) // materialize before the finally deletes
       }
-      // stop in a finally: a drain failure must not leave a live query
-      // firing against the source dir the outer finally deletes
-      try q.processAllAvailable() finally q.stop()
-      val words = s.table(name).localCheckpoint()
-      val members = ev.select(col("user_id").as("probe")).distinct()
-        .withColumn("kind", lit("member"))
-      // synthetic absent population: offset every member id by
-      // max(user_id)+1 — COMPUTED, so the populations are provably
-      // disjoint in any id domain (min absent = max+1+min > max). The
-      // round-15 literal +1e9 offset was only disjoint while ids
-      // stayed below 1e9 — at the 100 TB id scale an "absent" probe
-      // could be a real member, silently inflating the measured
-      // false-positive rate with the oracle agreeing (same literal).
-      val mx = ev.agg(max(col("user_id")).as("__mx"))
-      val absent = members.crossJoin(broadcast(mx)).select(
-          (col("probe") + col("__mx") + lit(1L)).as("probe"),
-          lit("absent").as("kind"))
-      val probes = members.unionByName(absent)
-        .select(col("kind"), col("probe"),
-          explode(sequence(lit(0), lit(k - 1))).as("__j"))
-        .withColumn("__p", bitpos(col("__j"), col("probe")))
-        .withColumn("word_idx", expr("__p DIV 32"))
-        .withColumn("__m",
-          expr("shiftleft(CAST(1 AS BIGINT), CAST(__p % 32 AS INT))"))
-        // LEFT join with a 0-word default: a probe hashing into a
-        // never-set word must test NEGATIVE, not vanish (an inner join
-        // silently dropped one sparse-filter probe at sf0.001)
-        .join(broadcast(words), Seq("word_idx"), "left")
-        .withColumn("__b", coalesce(col("bits"), lit(0L)))
-        .groupBy("kind", "probe")
-        .agg(min((col("__b").bitwiseAND(col("__m")) === col("__m"))
-          .cast("int")).as("__hit"))
-      val popcount = words
-        .agg(sum(expr("bit_count(bits)")).as("bits_set"))
-      val out = probes.groupBy("kind")
-        .agg(count(lit(1)).as("n_probes"),
-          sum(col("__hit")).as("n_positive"))
-        .crossJoin(broadcast(popcount))
-        .select(col("kind"),
-          col("n_probes").cast("bigint").as("n_probes"),
-          col("n_positive").cast("bigint").as("n_positive"),
-          expr("""CAST((CAST(n_positive AS DECIMAL(38,0)) * 1000000)
-                  DIV n_probes AS BIGINT)""").as("positive_ppm"),
-          col("bits_set").cast("bigint").as("bits_set"))
-        .orderBy("kind")
-        .localCheckpoint(true) // materialize before the finally deletes
-      out
-    } finally {
-      // the memory-sink view must not outlive the query even when the
-      // drain or the final materialization throws
-      s.catalog.dropTempView(name)
-      TmpTrees.delete(root)
-    }
+    } finally TmpTrees.delete(root)
   }
 
   /** STREAMING MISRA–GRIES HEAVY HITTERS — the q112 sketch-prune-then-
@@ -726,7 +683,7 @@ object QueriesStats {
           ev.filter(pmod(col("event_id"), lit(3)) === r)
         }
       }
-      val q = narrow(s, 4) {
+      StreamRun.toMemory(s, name) {
         graft.streaming.EventsStream
           .readEvents(s, src, maxFilesPerTrigger = Some(1))
           .select(pmod(col("user_id"), lit(nShards)).cast("int")
@@ -760,27 +717,22 @@ object QueriesStats {
               mg.keysIterator.map(item => (shard, seq, item))
           }
           .toDF("shard", "seq", "item")
-          .writeStream.outputMode("append").format("memory")
-          .queryName(name).start()
+          .writeStream.outputMode("append")
+      } { t =>
+        val snaps = t.localCheckpoint()
+        val latest = snaps.groupBy("shard").agg(max("seq").as("seq"))
+        val cands = snaps.join(broadcast(latest), Seq("shard", "seq"))
+          .select("item").distinct()
+        ev
+          .select(concat(col("event_type"), lit(":"),
+            pmod(col("user_id"), lit(13L)).cast("string")).as("item"))
+          .join(broadcast(cands), Seq("item"))
+          .groupBy("item").agg(count(lit(1)).as("n"))
+          .orderBy(col("n").desc, col("item"))
+          .limit(20)
+          .localCheckpoint(true) // materialize before the finally deletes
       }
-      try q.processAllAvailable() finally q.stop()
-      val snaps = s.table(name).localCheckpoint()
-      val latest = snaps.groupBy("shard").agg(max("seq").as("seq"))
-      val cands = snaps.join(broadcast(latest), Seq("shard", "seq"))
-        .select("item").distinct()
-      val out = ev
-        .select(concat(col("event_type"), lit(":"),
-          pmod(col("user_id"), lit(13L)).cast("string")).as("item"))
-        .join(broadcast(cands), Seq("item"))
-        .groupBy("item").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("item"))
-        .limit(20)
-        .localCheckpoint(true) // materialize before the finally deletes
-      out
-    } finally {
-      s.catalog.dropTempView(name)
-      TmpTrees.delete(root)
-    }
+    } finally TmpTrees.delete(root)
   }
 
   /** CALIBRATION BINS — the reliability-diagram eval every scored
@@ -969,7 +921,7 @@ object QueriesStats {
       .na.fill(0L, Seq("mask"))
       .groupBy("mask").agg(count(lit(1)).as("cnt"))
       .localCheckpoint() // ≤16 rows; probed by every subset
-    narrow(s, 8) {
+    Confs.scoped(s, Confs.narrow(s, 8)) {
     val spine = s.range(16).select(col("id").as("ss"))
     // complement within 4 bits: 15 − ss ≡ 15 XOR ss for ss ⊆ 0..15;
     // subtraction is the one spelling both engines share verbatim
@@ -1350,7 +1302,7 @@ object QueriesStats {
     * max_by aggregate with map-side combine) produces the duel list;
     * everything after lives on the brand-pair grid (≤ N² rows, N =
     * #brands — dimension-sized at any fact scale), iterated under
-    * narrow() since the frames are tiny.
+    * [[Confs.narrow]] since the frames are tiny.
     */
   def q306BradleyTerry(s: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(s, dir)
@@ -1381,7 +1333,7 @@ object QueriesStats {
     // aggregation re-ran three times (probed 5.3 s → 2.0 s at sf0.1)
     val dp = duels.groupBy("winner", "loser")
       .agg(count(lit(1)).as("c")).localCheckpoint()
-    narrow(s, 4) {
+    Confs.scoped(s, Confs.narrow(s, 4)) {
       // wins and the symmetric pair counts are independent aggregates
       // of the checkpointed dp — overlap their eager materializations
       // (round 20, guide §2.6)

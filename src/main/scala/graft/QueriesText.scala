@@ -496,13 +496,11 @@ object QueriesText {
       // 32-way shuffles are pure task overhead at that size (the q93
       // finding); scoped down for the stream, restored in finally. At
       // 100 TB the same knob sizes UP with batch volume.
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "4")
+      Confs.scoped(s, Confs.narrow(s, 4)) {
         graft.streaming.DedupStream.run(s, src, ckp, idx, dcs, prs,
           "doc_id", "text", shingleLen = 3, numHashes = 16, bands = 4,
           threshold = 0.8)
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       // materialize the union BEFORE the finally deletes the temp
       // tree, so the returned frame doesn't dangle on deleted files;
       // the checkpoint blocks are consumer-owned (Bench scrubs them

@@ -40,9 +40,18 @@ object Tables {
     * normalizes on the OBSERVED column type, so a testdata regeneration
     * in either format never silently breaks every events consumer.
     */
-  def events(s: SparkSession, d: String): DataFrame = {
+  def events(s: SparkSession, d: String): DataFrame =
+    normalizeEventTs(eventsRaw(s, s"$d/events.parquet"))
+
+  /** Events-shaped parquet at `path` AS ENCODED (ts not normalized) —
+    * the footer read every events reader goes through, batch or
+    * stream. This is the one place the legacy nanos conf is set; it
+    * stays set, so the streaming reader's later scans of the same
+    * files (and of files re-written from this frame) read them too.
+    */
+  def eventsRaw(s: SparkSession, path: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeEventTs(s.read.parquet(s"$d/events.parquet"))
+    s.read.parquet(path)
   }
 
   /** Normalize the events timestamp column to a zoned TimestampType

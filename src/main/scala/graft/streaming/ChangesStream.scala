@@ -44,7 +44,6 @@ object ChangesStream {
           .parquet(s"$historyDir/batch_id=$batchId")
       }
       .start()
-    q.processAllAvailable()
-    q.stop()
+    StreamRun.drain(q)
   }
 }

@@ -41,11 +41,9 @@ object CycleStream {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch(onBatch)
       .start()
-    // stop in finally: when onBatch throws (the crash-restart gate
-    // plants one), processAllAvailable rethrows the streaming failure
-    // and the query must still be torn down before the caller
-    // restarts from the same checkpoint
-    try q.processAllAvailable()
-    finally q.stop()
+    // when onBatch throws (the crash-restart gate plants one), the
+    // drain rethrows the streaming failure after tearing the query
+    // down, so the caller can restart from the same checkpoint
+    StreamRun.drain(q)
   }
 }

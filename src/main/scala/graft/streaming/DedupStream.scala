@@ -151,10 +151,11 @@ object DedupStream {
       }
       .start()
     // sanity: the id Spark adopted must be the one the marker records
-    // (it read the metadata file we wrote, or both predate this run)
-    assert(q.id.toString == streamId,
+    // (it read the metadata file we wrote, or both predate this run).
+    // A mismatch stops the query before rethrowing, like a drain does.
+    try assert(q.id.toString == streamId,
       s"DedupStream: query id ${q.id} != expected stream id $streamId")
-    q.processAllAvailable()
-    q.stop()
+    catch { case e: Throwable => q.stop(); throw e }
+    StreamRun.drain(q)
   }
 }

@@ -37,10 +37,10 @@ object EventsStream {
       maxFilesPerTrigger: Option[Int] = None,
       schemaHint: Option[org.apache.spark.sql.types.StructType] = None)
       : DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // schemaHint lets a caller defining several streams over one dir
-    // (q119's two sources) pay the footer read once
-    val onDisk = schemaHint.getOrElse(spark.read.parquet(dir).schema)
+    // (q119's two sources) pay the footer read once; it comes from
+    // Tables.eventsRaw, which also set the nanos read conf
+    val onDisk = schemaHint.getOrElse(graft.Tables.eventsRaw(spark, dir).schema)
     val base = spark.readStream.schema(onDisk)
     val reader = maxFilesPerTrigger
       .fold(base)(n => base.option("maxFilesPerTrigger", n))
@@ -111,16 +111,5 @@ object EventsStream {
           emit(st, closed = false)
           out.iterator
       }
-  }
-
-  /** Run a streaming frame to completion against a static directory
-    * (memory sink; local smoke/test harness — §2.10 batch-drives-stream).
-    */
-  def runToMemory(df: DataFrame, name: String, mode: OutputMode): DataFrame = {
-    val q = df.writeStream.outputMode(mode)
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    df.sparkSession.table(name)
   }
 }

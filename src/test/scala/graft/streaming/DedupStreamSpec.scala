@@ -102,4 +102,26 @@ class DedupStreamSpec extends AnyFunSuite {
     // and the pairing holds on restart (same checkpoint + same store)
     DedupStream.run(spark, src, ckp, idx, dcs, prs, "doc_id", "text")
   }
+
+  test("a store-identity mismatch stops the query before rethrowing") {
+    // the checkpoint metadata nests a decoy "id" ahead of the real one:
+    // the marker guard reads the decoy, Spark adopts the top-level id,
+    // so the post-start identity check fails with the query running
+    import java.nio.file.{Files, Paths}
+    val src = Files.createTempDirectory("dd3-src").toString
+    val ckp = Files.createTempDirectory("dd3-ckp").toString
+    val idx = Files.createTempDirectory("dd3-idx").toString
+    val dcs = Files.createTempDirectory("dd3-docs").toString
+    val prs = Files.createTempDirectory("dd3-pairs").toString
+    Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text")
+      .write.parquet(s"$dcs/batch_id=base")
+    Files.writeString(Paths.get(ckp, "metadata"),
+      s"""{"note":{"id":"decoy"},"id":"${java.util.UUID.randomUUID()}"}""")
+    Files.writeString(Paths.get(idx, "_stream_id"), "decoy")
+    val e = intercept[AssertionError] {
+      DedupStream.run(spark, src, ckp, idx, dcs, prs, "doc_id", "text")
+    }
+    assert(e.getMessage.contains("!= expected stream id decoy"))
+    assert(spark.streams.active.isEmpty)
+  }
 }

@@ -22,15 +22,17 @@ class EventsStreamSpec extends AnyFunSuite {
 
   test("windowed counts over the stream match the batch equivalent") {
     val stream = EventsStream.readEvents(spark, streamDir)
-    val got = EventsStream.runToMemory(
-      EventsStream.windowedCounts(stream), "win_counts", OutputMode.Append())
+    val g = StreamRun.toMemory(spark, "win_counts")(
+      EventsStream.windowedCounts(stream).writeStream
+        .outputMode(OutputMode.Append())) {
+      _.select($"window.start", $"event_type", $"n").as[(java.sql.Timestamp, String, Long)]
+        .collect().toSet
+    }
     // append mode emits only windows fully below the final watermark;
     // every emitted window must match the batch computation exactly
     val batch = graft.Tables.events(spark, dir)
       .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
-    val g = got.select($"window.start", $"event_type", $"n").as[(java.sql.Timestamp, String, Long)]
-      .collect().toSet
     val b = batch.select($"window.start", $"event_type", $"n").as[(java.sql.Timestamp, String, Long)]
       .collect().toSet
     assert(g.nonEmpty)
@@ -42,17 +44,19 @@ class EventsStreamSpec extends AnyFunSuite {
       .filter(col("event_type") === "error")
       .select(concat(lit("e"), col("user_id")).as("error_id"), col("ts"))
       .as[ErrorsStream.ErrOccurrence]
-    val updates = EventsStream.runToMemory(
-      ErrorsStream.accumulate(stream).toDF(), "err_acc", OutputMode.Update())
-    // Update mode re-emits a row per id per batch — the LAST row per id
-    // is the accumulated state
-    val got = updates.groupBy("error_id")
-      .agg(max(struct(col("count"), col("first_seen"), col("last_seen")))
-        .as("s"))
-      .select(col("error_id"), col("s.count"), col("s.first_seen"),
-        col("s.last_seen"))
-      .as[(String, Long, java.sql.Timestamp, java.sql.Timestamp)]
-      .collect().map { case (id, c, f, l) => id -> (c, f, l) }.toMap
+    val got = StreamRun.toMemory(spark, "err_acc")(
+      ErrorsStream.accumulate(stream).toDF().writeStream
+        .outputMode(OutputMode.Update())) {
+      // Update mode re-emits a row per id per batch — the LAST row per
+      // id is the accumulated state
+      _.groupBy("error_id")
+        .agg(max(struct(col("count"), col("first_seen"), col("last_seen")))
+          .as("s"))
+        .select(col("error_id"), col("s.count"), col("s.first_seen"),
+          col("s.last_seen"))
+        .as[(String, Long, java.sql.Timestamp, java.sql.Timestamp)]
+        .collect().map { case (id, c, f, l) => id -> (c, f, l) }.toMap
+    }
     val batch = graft.Tables.events(spark, dir)
       .filter(col("event_type") === "error")
       .groupBy(concat(lit("e"), col("user_id")).as("error_id"))
@@ -147,12 +151,15 @@ class EventsStreamSpec extends AnyFunSuite {
     val stream = EventsStream.readEvents(spark, streamDir)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
       .as[EventsStream.Event]
-    val got = EventsStream.runToMemory(
-      EventsStream.sessionize(stream, gapMinutes = 60).toDF(),
-      "sessions", OutputMode.Update())
+    val (gotUsers, gotEvents) = StreamRun.toMemory(spark, "sessions")(
+      EventsStream.sessionize(stream, gapMinutes = 60).toDF().writeStream
+        .outputMode(OutputMode.Update())) { got =>
+      (got.select("user_id").distinct().count(),
+        got.agg(sum("n_events")).first().getLong(0))
+    }
     val users = graft.Tables.events(spark, dir)
       .select(countDistinct($"user_id")).first().getLong(0)
-    assert(got.select("user_id").distinct().count() == users)
-    assert(got.agg(sum("n_events")).first().getLong(0) > 0)
+    assert(gotUsers == users)
+    assert(gotEvents > 0)
   }
 }
