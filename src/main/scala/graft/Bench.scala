@@ -109,6 +109,14 @@ object Bench {
   private[graft] def histHot(med: Double, hist: Double): Boolean =
     med > 0 && hist > 0 && med > 1.5 * hist && med - hist > 0.25
 
+  /** The run's core context for every emitted line: the requested
+    * `SPARK_GRAFT_CPUS` (a number: it also sets the shuffle width), the
+    * master the session really got, and its `defaultParallelism` — so
+    * an 8- vs 32-core run can be told apart from the tail line alone. */
+  private[graft] def runContext(cpus: String, master: String,
+      defaultParallelism: Int): String =
+    s""","cpus":$cpus,"master":"$master","default_parallelism":$defaultParallelism"""
+
   /** 1-minute /proc/loadavg figure, 0.0 when unreadable. */
   private def load1(csv: String): Double =
     csv.split(",").headOption
@@ -466,8 +474,10 @@ object Bench {
       else s""","suspect_unstable":${strArr(unstableSuspect)}"""
     val acceptJson =
       if (acceptBaseline) ""","accepted_baseline":true""" else ""
+    val sc = spark.sparkContext
     val guard =
-      s""","loadavg":"$loadBoot;$loadStart;$loadEnd","contended":$contended$acceptJson,"suspect":${strArr(stillSuspect)}$unstableJson$histJson$isolatedJson"""
+      s""","loadavg":"$loadBoot;$loadStart;$loadEnd","contended":$contended$acceptJson,"suspect":${strArr(stillSuspect)}$unstableJson$histJson$isolatedJson""" +
+        runContext(cpus, sc.master, sc.defaultParallelism)
     def line(rs: Seq[(String, Double)], extra: String): String =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":${qsJson(rs)},"sf":"$sfDir","passes":$passes$guard$extra}"""
     val fullLine = line(results, "")

@@ -92,11 +92,12 @@ object FeedMemo {
     }
   }
 
-  /** Memoized parquet frame read-back (the FeedCache.frame shape). */
+  /** Memoized parquet frame read-back (the FeedCache.frame shape);
+    * a repeat read schedules no job ([[Tables.parquet]]). */
   def frame(s: SparkSession, dataDir: String, key: String)(
       build: => DataFrame): DataFrame =
     if (sys.env.contains("SPARK_GRAFT_NO_FEEDCACHE")) build
-    else s.read.parquet(path(dataDir, key)(build))
+    else Tables.parquet(s, path(dataDir, key)(build))
 
   /** First data file of a memoized feed directory. */
   def partFile(memoDir: String): java.nio.file.Path = {
@@ -113,12 +114,15 @@ object FeedMemo {
     * into `destDir` stamped with `mtimeMillis` — the streaming gates'
     * delivery-slice writer. File name carries `key` so repeated
     * deliveries of the SAME slice (late/duplicate replays) get
-    * distinct names via `nameSuffix`.
+    * distinct names via `nameSuffix`. Returns the memo directory, a
+    * stable path whose schema [[Tables.parquet]] reads without a job
+    * on a repeat (the run-private `destDir` is new every run).
     */
   def copySlice(dataDir: String, key: String, destDir: String,
       mtimeMillis: Long, nameSuffix: String = "")(
-      build: => DataFrame): Unit = {
-    val part = partFile(path(dataDir, key)(build))
+      build: => DataFrame): String = {
+    val memoDir = path(dataDir, key)(build)
+    val part = partFile(memoDir)
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(destDir))
     val dst = java.nio.file.Paths.get(destDir,
@@ -126,5 +130,6 @@ object FeedMemo {
     java.nio.file.Files.copy(part, dst)
     java.nio.file.Files.setLastModifiedTime(dst,
       java.nio.file.attribute.FileTime.fromMillis(mtimeMillis))
+    memoDir
   }
 }

@@ -1114,7 +1114,7 @@ object QueriesCore {
         col("ts"), col("event_id"))
     val root = java.nio.file.Files.createTempDirectory("q113-stream").toString
     val src = s"$root/src"
-    Seq(0, 1, 2).foreach { r =>
+    val slices = Seq(0, 1, 2).map { r =>
       FeedMemo.copySlice(dir, s"q113_s$r", src, 1000000000000L + r * 60000L) {
         errs.filter(pmod(col("event_id"), lit(3)) === r)
           .select("error_id", "ts")
@@ -1123,7 +1123,9 @@ object QueriesCore {
     val name = java.nio.file.Paths.get(root).getFileName.toString
       .replaceAll("[^A-Za-z0-9_]", "_")
     try StreamRun.toMemory(s, name) {
-      val occ = s.readStream.schema(s.read.parquet(src).schema)
+      // the slices share one schema; read it off a memo dir, which a
+      // repeat run finds memoized (src is new every run)
+      val occ = s.readStream.schema(Tables.parquet(s, slices.head).schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
         .as(org.apache.spark.sql.Encoders
           .product[graft.streaming.ErrorsStream.ErrOccurrence])
@@ -1356,7 +1358,7 @@ object QueriesCore {
     try {
       graft.operators.Scale.writeDatePartitioned(
         Tables.events(s, dir), s"$root/events", "ts")
-      val pruned = s.read.parquet(s"$root/events")
+      val pruned = Tables.parquet(s, s"$root/events")
         .filter(col("event_date") >= lit("2024-01-08").cast("date") &&
           col("event_date") < lit("2024-01-15").cast("date"))
         .groupBy(col("event_date"), col("event_type"))
@@ -1724,7 +1726,7 @@ object QueriesCore {
         }
         n
       }
-      s.read.parquet(s"$root/compact")
+      Tables.parquet(s, s"$root/compact")
         .agg(count(lit(1)).as("n_rows"),
           count_distinct(col("l_orderkey")).as("n_orders"),
           sum(col("l_quantity").cast("decimal(18,2)")).as("__q"),

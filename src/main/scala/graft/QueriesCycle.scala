@@ -183,20 +183,20 @@ object QueriesCycle {
     // below tests residues of these, never of the raw keys
     def cx = col("c") + lit(cS)
     def ox = col("o") + lit(oS)
-    val cust = Tables.customer(s, dir)
+    lazy val cust = Tables.customer(s, dir)
       .filter(col("c_custkey") % custMod === 0)
       .select(
       col("c_custkey").as("c"), col("c_nationkey").as("nk"),
       col("c_mktsegment").as("seg"))
-    val nation = Tables.nation(s, dir)
+    lazy val nation = Tables.nation(s, dir)
       .select(col("n_nationkey").as("nk"), col("n_name"),
         col("n_regionkey").as("rk"))
-    val region = Tables.region(s, dir)
+    lazy val region = Tables.region(s, dir)
       .select(col("r_regionkey").as("rk"), col("r_name"))
-    val supp = Tables.supplier(s, dir)
+    lazy val supp = Tables.supplier(s, dir)
       .filter(col("s_suppkey") % custMod === 0)
       .select(col("s_suppkey").as("sk"), col("s_nationkey").as("snk"))
-    val ords = Tables.orders(s, dir)
+    lazy val ords = Tables.orders(s, dir)
       .filter(col("o_orderkey") % ordsMod < 2)
       .select(col("o_orderkey").as("o"), col("o_custkey").as("c"))
       .join(cust.select(col("c"), col("nk")), Seq("c"))
@@ -219,13 +219,13 @@ object QueriesCycle {
       when(col("rk") === 4, array(struct(lit("oz").as("uuid"))))
         .otherwise(array().cast(uuidArrT)).as("parents"),
       emptyIds.as("ids")))
-    val rawInternalOrgs = nation
+    lazy val rawInternalOrgs = nation
       .select(concat(lit("o"), col("nk")).as("uuid"), ts(T1).as("modified"),
         nationOrgJson.as("json"))
       .unionByName(region.select(concat(lit("r"), col("rk")).as("uuid"),
         ts(T1).as("modified"), regionOrgJson.as("json")))
 
-    val existingOrgs = nation.filter((col("nk") + lit(cS)) % 7 === 3)
+    lazy val existingOrgs = nation.filter((col("nk") + lit(cS)) % 7 === 3)
       .select(concat(lit("o"), col("nk")).as("pure_uuid"),
         concat(lit("OLDORG"), col("nk")).as("pure_id"),
         ts(T2).as("pure_modified"))
@@ -234,7 +234,7 @@ object QueriesCycle {
           ts(T0).as("pure_modified")))
 
     // ---- CDC: external orgs (regions)
-    val rawExternalOrgs = region.select(
+    lazy val rawExternalOrgs = region.select(
       concat(lit("x"), col("rk")).as("uuid"), ts(T1).as("modified"),
       to_json(struct(
         concat(lit("x"), col("rk")).as("uuid"),
@@ -265,7 +265,7 @@ object QueriesCycle {
         when(col("c") % 23 === 7, lit("2019-12-31"))
           .otherwise(lit(null).cast("string")).as("endDate")).as("period"),
       lit(true).as("isPrimaryAssociation"))
-    val rawInternalPersons = cust.select(
+    lazy val rawInternalPersons = cust.select(
       concat(lit("p"), col("c")).as("uuid"), ts(T1).as("modified"),
       to_json(struct(
         concat(lit("p"), col("c")).as("uuid"),
@@ -279,7 +279,7 @@ object QueriesCycle {
         ids.as("ids"),
         array(assoc).as("staffOrganisationAssociations"))).as("json"))
 
-    val existingPersons = cust.filter(cx % 5 === 0 || cx % 5 === 3)
+    lazy val existingPersons = cust.filter(cx % 5 === 0 || cx % 5 === 3)
       .select(concat(lit("dbu"), col("c")).as("uuid"),
         col("c").cast("string").as("emplid"),
         concat(lit("p"), col("c")).as("pure_uuid"),
@@ -287,7 +287,7 @@ object QueriesCycle {
           .as("pure_modified"))
 
     // ---- CDC: external persons (suppliers)
-    val rawExternalPersons = supp.select(
+    lazy val rawExternalPersons = supp.select(
       concat(lit("xp"), col("sk")).as("uuid"), ts(T1).as("modified"),
       to_json(struct(
         concat(lit("xp"), col("sk")).as("uuid"),
@@ -374,7 +374,7 @@ object QueriesCycle {
           concat(lit("pm"), col("o")).as("value"))))
       .otherwise(array(struct(lit("Scopus").as("idSource"),
         concat(lit("asc"), col("o")).as("value"))))
-    val rawPubs = ords.select(
+    lazy val rawPubs = ords.select(
       concat(lit("pub"), col("o")).as("uuid"), ts(T1).as("modified"),
       to_json(struct(
         concat(lit("pub"), col("o")).as("uuid"),
@@ -401,14 +401,14 @@ object QueriesCycle {
           array().cast("array<string>").as("previousUuids")).as("info"),
         assocs.as("personAssociations"))).as("json"))
 
-    val existingPubs = ords.filter(ox % 500 === 0)
+    lazy val existingPubs = ords.filter(ox % 500 === 0)
       .select(concat(lit("dbp"), col("o")).as("uuid"),
         concat(lit("pub"), col("o")).as("pure_uuid"),
         when(ox % 1000 === 500, ts(T2)).otherwise(ts(T0))
           .as("pure_modified"))
 
     // ---- HR side
-    val demog = cust.select(
+    lazy val demog = cust.select(
       col("c").cast("string").as("emplid"),
       when(col("c") % 3 =!= 1, concat(lit("u"), col("c"))).as("internet_id"),
       concat(lit("F"), col("c")).as("first_name"),
@@ -418,10 +418,10 @@ object QueriesCycle {
       concat(lit("e"), col("c"), lit("@x.org")).as("instl_email_addr"),
       lit("0").as("primary_empl_rcdno"),
       ts(T1).as("timestamp"))
-    val scival = cust.filter(col("c") % 10 === 0)
+    lazy val scival = cust.filter(col("c") % 10 === 0)
       .select(col("c").cast("string").as("emplid"),
         concat(lit("SV"), col("c")).as("scival_id"))
-    val empEntries = cust.select(
+    lazy val empEntries = cust.select(
       col("c").cast("string").as("emplid"),
       lit("0").as("empl_rcdno"),
       lit("P1").as("position_nbr"),
@@ -443,7 +443,6 @@ object QueriesCycle {
         .as("um_campus_descr"),
       concat(lit("CL"), col("nk") % 3).as("um_college"),
       concat(lit("CLD"), col("nk") % 3).as("um_college_descr"))
-    val poiEntries = empEntries.drop("last_date_worked").limit(0)
     val affEntries = cust.select(
       col("c").cast("string").as("emplid"),
       col("nk").cast("string").as("deptid"),
@@ -457,7 +456,7 @@ object QueriesCycle {
       lit("CL0").as("um_college"), lit("CLD0").as("um_college_descr"),
       lit("TXXX").as("um_campus"), lit("TC").as("um_campus_descr"))
       .limit(0)
-    val deptOrg = nation.filter(col("nk") =!= 23)
+    lazy val deptOrg = nation.filter(col("nk") =!= 23)
       .select(col("nk").cast("string").as("deptid"),
         concat(lit("DIM"), col("nk")).as("pure_org_id"))
     import s.implicits._
@@ -483,11 +482,16 @@ object QueriesCycle {
     // data-derived frames go through the process-lifetime parquet
     // memo (see FeedCache): built once per (dir, slice), read back as
     // plain scans by every gate. Literal/limit(0) frames stay inline.
+    // The derived frames above are lazy: on a memo hit their thunks
+    // are never forced, so their expression trees (rawPubs' to_json)
+    // are never analysed either.
     def cached(tag: String, df: => DataFrame): DataFrame =
       FeedCache.frame(s, dir, s"${tag}_${custMod}_$ordsMod")(df)
+    val emp = cached("emp", empEntries)
     Runner.CycleInputs(
       demogHistory = cached("demog", demog), scival = cached("scival", scival),
-      empEntries = cached("emp", empEntries), poiEntries = poiEntries,
+      empEntries = emp,
+      poiEntries = emp.drop("last_date_worked").limit(0),
       affEntries = affEntries,
       deptOrg = cached("deptorg", deptOrg),
       empJobcodes = empJobcodes,
@@ -558,6 +562,13 @@ object QueriesCycle {
     * from ~4.5 s / 61 AQE stage-jobs to a single pass over the
     * materialized union. Semantics-free like every mat hook
     * (Round17Spec pins identity ≡ checkpoint).
+    *
+    * The union is coalesced (a narrow dependency) to the session's
+    * shuffle width, which the callers' scopes narrow, before the cut:
+    * it has one partition per branch partition, and each of its tasks
+    * deserializes the whole 14-branch task binary (~77 ms on a 4-vCPU
+    * VM), in the cut and again in the sort's map stage (q342 at
+    * sf0.01: 50 tasks each → 8).
     */
   private def serializeOutputs(out: Runner.CycleOutputs,
       mat: DataFrame => DataFrame = identity): DataFrame = {
@@ -622,7 +633,9 @@ object QueriesCycle {
         col("jobcode_descr"), col("deptid"), col("deptid_descr"),
         col("persons_in_dept"), col("um_college"), col("um_college_descr"),
         col("um_campus"), col("um_campus_descr")))
-    mat(PlanSpy.spy("serialize_union_premat", parts.reduce(_.unionByName(_))))
+    val union = parts.reduce(_.unionByName(_))
+    val width = union.sparkSession.conf.get(Confs.ShufflePartitions).toInt
+    mat(PlanSpy.spy("serialize_union_premat", union.coalesce(width)))
       .orderBy("tbl", "k", "v")
   }
 

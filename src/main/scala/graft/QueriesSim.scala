@@ -51,12 +51,12 @@ object QueriesSim {
   }
 
   /** Embedding-cosine near-duplicate pairs ≥ 0.42, exact (all-pairs).
-    * The LSH-bucketed variant (q42) is the 100 TB scale path; this one
+    * The LSH-bucketed variant (q56) is the 100 TB scale path; this one
     * is the oracle-checkable ground truth.
     */
   def q41EmbeddingNearDup(s: SparkSession, dir: String): DataFrame = {
     // scoped to every 4th vector: all-pairs is quadratic by design — the
-    // oracle-checkable exact baseline; LSH (q42) is the scale path.
+    // oracle-checkable exact baseline; LSH (q56) is the scale path.
     // norms precomputed once per row; pair stage = one dot + a divide,
     // in the same operation order as the oracle's list_cosine_similarity
     val all = vecsD(s, dir).filter(pmod(col("vec_id"), lit(4)) === 0)
@@ -73,26 +73,13 @@ object QueriesSim {
       .orderBy("id_a", "id_b")
   }
 
-  /** LSH (random-hyperplane) bucketed ANN top-5: the scale path —
-    * per-query work is its bucket's slice, not the whole corpus. No
-    * DuckDB oracle (bucketing is xxhash64-seeded); recall vs q40 is
-    * asserted in ScalaTest.
-    */
-  def q42LshTopk(s: SparkSession, dir: String): DataFrame = {
-    val all = vecsD(s, dir)
-    Similarity.lshTopK(all, all.filter(pmod(col("vec_id"), lit(50)) === 0),
-        "vec_id", "embedding", k = 5, nPlanes = 4, probes = 4)
-      .withColumn("rank", col("rank").cast("int"))
-      .orderBy("query_id", "rank")
-  }
-
-  /** Engine-portable LSH top-5 — the md5-seeded twin of q42: plane
-    * components come from md5 instead of xxhash64
+  /** Engine-portable LSH (random-hyperplane) bucketed ANN top-5 — the
+    * scale path, per-query work is its bucket's slice, not the whole
+    * corpus. Plane components come from md5 instead of xxhash64
     * ([[Similarity.hyperplaneBucket]] portable mode), so the DuckDB
     * oracle replicates the WHOLE scale path end-to-end — bucket bits,
-    * multi-probe bucket set, candidate join, cosine, and ranking.
-    * Same shape/parameters as q42; that query keeps the fast hash and
-    * its ScalaTest recall coverage.
+    * multi-probe bucket set, candidate join, cosine, and ranking. The
+    * xxhash64 mode keeps its ScalaTest recall coverage.
     */
   def q56LshTopkPortable(s: SparkSession, dir: String): DataFrame = {
     val all = vecsD(s, dir)
@@ -104,7 +91,7 @@ object QueriesSim {
   }
 
   /** IVF-bucketed ANN top-5: the data-adaptive scale path beside LSH
-    * (q42) — k-means inverted lists, nProbe closest lists per query.
+    * (q56) — k-means inverted lists, nProbe closest lists per query.
     * No DuckDB oracle (Lloyd training isn't SQL-expressible there);
     * recall vs q40 exact is asserted in ScalaTest (SimilaritySpec).
     */
@@ -307,7 +294,7 @@ object QueriesSim {
     val root = java.nio.file.Files.createTempDirectory("q92-ivf").toString
     try {
       lists0.write.parquet(s"$root/lists")
-      val lists = s.read.parquet(s"$root/lists")
+      val lists = Tables.parquet(s, s"$root/lists")
       def serve(batch: DataFrame, tag: String): DataFrame =
         Similarity.ivfPortableTopKWithIndex(lists, cents, batch, "vec_id",
             "embedding", k = 5, nProbe = 3)
@@ -620,9 +607,9 @@ object QueriesSim {
     "q131_vector_stats" -> q131VectorStats _,
     "q40_topk_brute_force" -> q40TopkBruteForce _,
     "q41_embedding_near_dup" -> q41EmbeddingNearDup _,
-    // q42 (xxhash64 hyperplane LSH) left the declared surface in r17:
-    // q69's md5-seeded incremental variant is the hash-gated twin and
-    // q40 the exact-recall baseline; the fast path stays spec-gated.
+    // xxhash64 hyperplane LSH (once q42) is not declared: q56/q69 are
+    // its hash-gated md5 twins and q40 the exact-recall baseline; the
+    // fast path stays spec-gated.
     "q46_ivf_topk" -> q46IvfTopk _,
     "q56_lsh_topk_portable" -> q56LshTopkPortable _,
     "q60_quantized_topk" -> q60QuantizedTopk _,

@@ -14,12 +14,11 @@ import graft.operators.{Dedup, TextAnalysis}
   * q61–q63 have exact DuckDB oracles (q55/q58/q59 make MinHash+LSH,
   * SimHash, and winnowing oracle-checkable via md5-seeded hashing;
   * q61/q62/q63 are the sequence-packing, source-quota, and
-  * mixture-sampling curation steps). q36/q37/q38
-  * are hash-family dependent (xxhash64 and the rolling hash have no
-  * DuckDB twin — each has an oracle-checked md5 twin instead) and
-  * q48 needs zlib → declared without oracle, driver records the
-  * weaker rows-only check; their CORRECTNESS is covered by ScalaTest
-  * specs against exact ground truth.
+  * mixture-sampling curation steps). The xxhash64 and rolling-hash
+  * sketch paths have no DuckDB twin and are not declared queries (their
+  * md5 twins are); q48 needs zlib → declared without oracle, so only
+  * the weaker rows-only check runs; its CORRECTNESS is covered by
+  * ScalaTest specs against exact ground truth.
   */
 object QueriesText {
   import QueriesCore.Q
@@ -78,17 +77,9 @@ object QueriesText {
         "doc_id", "text", shingleLen = 3, threshold = 0.8)
       .orderBy("id_a", "id_b")
 
-  /** MinHash(64 hashes)+LSH(16 bands) near-dup pairs, verified at exact
-    * Jaccard ≥ 0.8. No DuckDB oracle (xxhash64); ScalaTest asserts
-    * equality with q35's exact pairs at high threshold.
-    */
-  def q36MinhashLsh(s: SparkSession, dir: String): DataFrame =
-    Dedup.minhashNearDups(Tables.documents(s, dir), "doc_id", "text",
-        shingleLen = 3, numHashes = 64, bands = 16, threshold = 0.8)
-      .orderBy("id_a", "id_b")
-
   /** Engine-portable MinHash+LSH near-dups — the md5-seeded twin of
-    * q36 ([[Dedup.minhashNearDupsPortable]]): every hash in the
+    * the xxhash64 `Dedup.minhashNearDups`
+    * ([[Dedup.minhashNearDupsPortable]]): every hash in the
     * pipeline is md5-derived, so the DuckDB oracle replicates the
     * WHOLE operator end-to-end — per-seed signature minima, band join
     * keys, the candidate set, and the verified Jaccard — bit-for-bit
@@ -96,27 +87,19 @@ object QueriesText {
     * portable in q51). One md5 per shingle; the 16 per-seed hashes
     * derive from a seed-keyed affine family, so the portable bill is
     * digest-per-shingle, not digest-per-(shingle,seed). The xxhash64
-    * fast path (q36) keeps its ScalaTest parity coverage.
+    * fast path keeps its ScalaTest parity coverage.
     */
   def q55MinhashPortable(s: SparkSession, dir: String): DataFrame =
     Dedup.minhashNearDupsPortable(Tables.documents(s, dir), "doc_id", "text",
         shingleLen = 3, numHashes = 16, bands = 4, threshold = 0.8)
       .orderBy("id_a", "id_b")
 
-  /** SimHash near-dup pairs (hamming ≤ 3 of 64-bit signatures via
-    * 4-chunk pigeonhole banding). No DuckDB oracle (xxhash64).
-    */
-  def q37Simhash(s: SparkSession, dir: String): DataFrame =
-    Dedup.simhashNearDups(Tables.documents(s, dir), "doc_id", "text",
-        maxHamming = 3)
-      .orderBy("id_a", "id_b")
-
-  /** Engine-portable SimHash near-dups — the md5-seeded twin of q37
-    * ([[Dedup.simhashNearDupsPortable]]): per-token 60-bit md5-prefix
+  /** Engine-portable SimHash near-dups — the md5-seeded twin of the
+    * xxhash64 `Dedup.simhashNearDups` ([[Dedup.simhashNearDupsPortable]]): per-token 60-bit md5-prefix
     * hashes, per-bit vote sums, 4 × 15-bit pigeonhole banding for
     * hamming ≤ 3, all replicated value-for-value by the DuckDB
-    * oracle. The xxhash64 codegen path (q37) keeps its ScalaTest
-    * parity coverage.
+    * oracle. The xxhash64 codegen path keeps its ScalaTest parity
+    * coverage.
     */
   def q58SimhashPortable(s: SparkSession, dir: String): DataFrame =
     Dedup.simhashNearDupsPortable(Tables.documents(s, dir), "doc_id", "text",
@@ -124,7 +107,8 @@ object QueriesText {
       .orderBy("id_a", "id_b")
 
   /** Engine-portable winnowing fingerprints — the md5-seeded twin of
-    * q38 ([[TextAnalysis.winnowPortable]], k=8 w=4 like q38): the
+    * the codegen `RollingWinnow` ([[TextAnalysis.winnowPortable]],
+    * k=8 w=4): the
     * DuckDB oracle replicates gram hashing, the packed window-min
     * with rightmost tie-break, and position dedup row-for-row.
     */
@@ -136,20 +120,6 @@ object QueriesText {
         k = 8, w = 4)
       .localCheckpoint()
       .orderBy("doc_id", "pos")
-
-  /** Winnowing rolling-hash fingerprints via the custom Catalyst
-    * expression [[graft.functions.RollingWinnow]] (codegen'd; MOSS
-    * algorithm). No DuckDB oracle (rows-only) — semantics verified in
-    * RollingWinnowSpec against an independent direct-hash crosscheck.
-    */
-  def q38Winnow(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir)
-      .select(col("doc_id"),
-        graft.functions.RollingWinnow.rollingWinnow(col("text"), 8, 4)
-          .as("fp"))
-      .select(col("doc_id"), size(col("fp")).cast("long").as("n_fp"),
-        array_min(col("fp")).as("min_fp"), array_max(col("fp")).as("max_fp"))
-      .orderBy("doc_id")
 
   /** Concat-and-chunk sequence packing ([[graft.operators.Scale
     * .packSequences]], seqLen 2048): every doc's global token offset
@@ -376,9 +346,8 @@ object QueriesText {
     val media = docs.select(col("doc_id").cast("long").as("media_id"),
       payload.as("bytes"))
     // project the array<float> features to per-row scalars: the driver's
-    // pandas sort-then-hash compare can't handle ndarray cells (same
-    // pattern as q38's fingerprint projection above); decode exactness
-    // stays pixel-tested in SourcesSpec
+    // pandas sort-then-hash compare can't handle ndarray cells; decode
+    // exactness stays pixel-tested in SourcesSpec
     graft.sources.Multimodal.decodeFeatures(media, dim = 8, batchSize = 64)
       .select(col("media_id"),
         size(col("features")).cast("long").as("n_feat"),
@@ -481,8 +450,8 @@ object QueriesText {
       graft.operators.Dedup.minhashBandIndexPortable(corpus, "doc_id",
         "text", shingleLen = 3, numHashes = 16, bands = 4)
     }
-    FeedMemo.copySlice(dir, "q86_docs_base", s"$dcs/batch_id=base",
-      1000000000000L)(corpus)
+    val docsBase = FeedMemo.copySlice(dir, "q86_docs_base",
+      s"$dcs/batch_id=base", 1000000000000L)(corpus)
     // three ingest drops, one file each (coalesce(1) + append) so
     // maxFilesPerTrigger=1 yields three micro-batches; batch order is
     // irrelevant to the union invariant
@@ -499,13 +468,14 @@ object QueriesText {
       Confs.scoped(s, Confs.narrow(s, 4)) {
         graft.streaming.DedupStream.run(s, src, ckp, idx, dcs, prs,
           "doc_id", "text", shingleLen = 3, numHashes = 16, bands = 4,
-          threshold = 0.8)
+          threshold = 0.8, docsSchema = Some(Tables.parquet(s, docsBase)
+            .select("doc_id", "text").schema))
       }
       // materialize the union BEFORE the finally deletes the temp
       // tree, so the returned frame doesn't dangle on deleted files;
       // the checkpoint blocks are consumer-owned (Bench scrubs them
       // post-measurement)
-      s.read.parquet(prs)
+      Tables.parquet(s, prs)
         .select(col("id_a"), col("id_b"), col("jaccard"))
         .orderBy("id_a", "id_b")
         .localCheckpoint(true)
@@ -1529,11 +1499,10 @@ object QueriesText {
     "q33_fingerprint" -> q33Fingerprint _,
     "q34_exact_dedup" -> q34ExactDedup _,
     "q35_ngram_jaccard" -> q35NgramJaccard _,
-    // q36/q37/q38 (the xxhash64-native sketch variants) left the
-    // declared surface in r17: each duplicated its HASH-GATED portable
-    // twin below with only the hash family changed, and the twin is
-    // the stronger gate. The fast paths stay implemented + spec-gated
-    // (SketchSigsParitySpec, RollingWinnowSpec) as plan-shape variants.
+    // the xxhash64-native sketch variants (once q36/q37/q38) are not
+    // declared: each duplicated its HASH-GATED portable twin below with
+    // only the hash family changed. The fast-path operators stay
+    // spec-gated (SketchSigsParitySpec, RollingWinnowSpec).
     "q55_minhash_portable" -> q55MinhashPortable _,
     "q58_simhash_portable" -> q58SimhashPortable _,
     "q59_winnow_portable" -> q59WinnowPortable _,

@@ -59,7 +59,7 @@ object ScaleProbe {
       .write.mode("overwrite").parquet(s"$out/lineitem.parquet")
     Seq("region", "nation", "customer", "supplier", "part")
       .foreach { t =>
-        s.read.parquet(s"$sfDir/$t.parquet")
+        Tables.parquet(s, s"$sfDir/$t.parquet")
           .write.mode("overwrite").parquet(s"$out/$t.parquet")
       }
     // events: user_id AND event_id offset per copy — copies are fully

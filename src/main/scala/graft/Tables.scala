@@ -2,16 +2,18 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Parquet table loaders for the driver-generated testdata star schema
   * (TESTDATA.md). In production these would be `spark.read.jdbc` /
   * Delta-table reads; the load path is isolated here so sources can be
   * swapped without touching operators.
   *
-  * Scale note: parquet scans here are plain `spark.read.parquet` so
-  * Catalyst's `ColumnPruning` + `PushDownPredicates` reach the scan
-  * (verify with `.explain`: `PushedFilters`, `ReadSchema`).
+  * [[parquet]] is the program's one parquet reader (`ConfScopeSpec`
+  * keeps it that way): a plain `spark.read.parquet` that memoizes the
+  * inferred schema, so Catalyst's `ColumnPruning` +
+  * `PushDownPredicates` still reach the scan (verify with `.explain`:
+  * `PushedFilters`, `ReadSchema`).
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -22,7 +24,69 @@ object Tables {
     // events needs its nanos-timestamp workaround on EVERY path,
     // including generic by-name loads (e.g. the Bench warmup scan).
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else parquet(spark, s"$dir/$name.parquet")
+
+  /** Schemas inferred by [[parquet]], keyed by [[schemaKey]]; access-
+    * ordered and capped, since fresh temp dirs (stream sources, run-
+    * private stores) each add a key that is never read again. */
+  private val schemas =
+    new java.util.LinkedHashMap[String, StructType](64, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, StructType]): Boolean = size > 256
+    }
+
+  /** `spark.read.parquet(path)` without the repeat schema inference.
+    * A plain read runs a one-task footer job every time
+    * (`ParquetUtils.inferSchema`); the sync cycle opened with 17 of
+    * them in a row. The first read of a path infers as usual; a repeat
+    * whose [[schemaKey]] matches reads with `.schema(inferred)` and
+    * schedules no job. Only metadata is memoized: every call builds a
+    * fresh scan, so pruning and pushdown are unchanged, and new files
+    * are listed. A path the key cannot list (a glob, a missing path)
+    * falls through to the plain read.
+    */
+  def parquet(s: SparkSession, path: String): DataFrame =
+    schemaKey(s, path) match {
+      case None => s.read.parquet(path)
+      case Some(k) =>
+        schemas.synchronized(Option(schemas.get(k))) match {
+          case Some(st) => s.read.schema(st).parquet(path)
+          case None =>
+            val df = s.read.parquet(path)
+            schemas.synchronized(schemas.put(k, df.schema))
+            df
+        }
+    }
+
+  /** What an inferred parquet schema depends on: the path, every file
+    * under it (relative name, size, mtime — a rewrite or a new
+    * partition changes it) and the session's parquet type-mapping and
+    * partition-inference confs, `nanosAsLong` included. None when the
+    * path cannot be listed as given.
+    */
+  private def schemaKey(s: SparkSession, path: String): Option[String] =
+    scala.util.Try {
+      val root = new org.apache.hadoop.fs.Path(path)
+      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+      val prefix = fs.makeQualified(root).toString
+      val files = fs.listFiles(root, true)
+      val listing = Seq.newBuilder[String]
+      while (files.hasNext) {
+        val f = files.next()
+        listing += s"${f.getPath.toString.stripPrefix(prefix)}|${f.getLen}" +
+          s"|${f.getModificationTime}"
+      }
+      val confs = s.conf.getAll.toSeq.filter { case (k, _) =>
+        schemaConfs.exists(k.startsWith) }.sorted
+      val md5 = java.security.MessageDigest.getInstance("MD5")
+      (listing.result().sorted ++ confs.map { case (k, v) => s"$k=$v" })
+        .foreach(l => md5.update((l + "\n").getBytes("UTF-8")))
+      prefix + "#" + md5.digest().map("%02x".format(_)).mkString
+    }.toOption
+
+  private val schemaConfs = Seq("spark.sql.parquet.",
+    "spark.sql.legacy.parquet.", "spark.sql.caseSensitive",
+    "spark.sql.sources.", "spark.sql.files.")
 
   def region(s: SparkSession, d: String): DataFrame    = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = apply(s, d, "nation")
@@ -51,7 +115,7 @@ object Tables {
     */
   def eventsRaw(s: SparkSession, path: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.read.parquet(path)
+    parquet(s, path)
   }
 
   /** Normalize the events timestamp column to a zoned TimestampType

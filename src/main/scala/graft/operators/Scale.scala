@@ -149,7 +149,7 @@ object Scale {
       sum
     }
     val n = math.max(1L, (total + targetBytes - 1) / targetBytes).toInt
-    spark.read.parquet(inDir).repartition(n)
+    graft.Tables.parquet(spark, inDir).repartition(n)
       .write.mode("overwrite").parquet(outDir)
     n
   }

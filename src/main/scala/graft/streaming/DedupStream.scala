@@ -34,6 +34,8 @@ object DedupStream {
     * against the band index rooted at `indexDir` (pre-seeded with the
     * corpus bands under `batch_id=base`; corpus raw docs under
     * `docsDir/batch_id=base`), writing pair sets under `pairsDir`.
+    * `docsSchema` (idCol, textCol) spares the footer read of
+    * `docsDir` when the caller already holds it.
     */
   def run(
       spark: SparkSession,
@@ -48,7 +50,9 @@ object DedupStream {
       numHashes: Int = 16,
       bands: Int = 4,
       threshold: Double = 0.6,
-      maxFilesPerTrigger: Int = 1): Unit = {
+      maxFilesPerTrigger: Int = 1,
+      docsSchema: Option[org.apache.spark.sql.types.StructType] = None)
+      : Unit = {
     // Store↔checkpoint identity guard: the stream's identity is its
     // checkpoint id (STABLE across legitimate restarts from the same
     // checkpoint); the store remembers which stream built it. Batch-id
@@ -101,7 +105,8 @@ object DedupStream {
       java.nio.file.Files.createDirectories(marker.getParent)
       java.nio.file.Files.writeString(marker, streamId)
     }
-    val schema = spark.read.parquet(s"$docsDir").select(idCol, textCol).schema
+    val schema = docsSchema.getOrElse(
+      graft.Tables.parquet(spark, docsDir).select(idCol, textCol).schema)
     val stream = spark.readStream.schema(schema)
       // one file per micro-batch by default: each ingest drop probes
       // the index BEFORE being folded in, the daily-ingest cadence
@@ -132,7 +137,7 @@ object DedupStream {
           // numeric-only batch dirs would infer an integer column and
           // the === "base" comparison would cross types (null under
           // ANSI-off casts), silently emptying the base branch.
-          def past(dir: String) = s.read.parquet(dir)
+          def past(dir: String) = graft.Tables.parquet(s, dir)
             .filter(col("batch_id").cast("string") === "base" ||
               expr("try_cast(batch_id AS BIGINT)") < batchId)
           val index = past(indexDir).select(idCol, "band_idx", "band_hash")

@@ -105,4 +105,14 @@ class BenchSpec extends AnyFunSuite {
     // failed passes are excluded from min/median before the test
     assert(Bench.spread(List(-1.0, 1.0, 3.0, 3.5)))
   }
+
+  test("runContext echoes cpus, master and defaultParallelism as JSON") {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    val j = JsonMethods.parse("{\"metric\":\"total\"" +
+      Bench.runContext("8", "local[8]", 8) + "}")
+    assert((j \ "cpus") == JInt(8))
+    assert((j \ "master") == JString("local[8]"))
+    assert((j \ "default_parallelism") == JInt(8))
+  }
 }

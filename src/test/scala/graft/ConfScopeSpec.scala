@@ -6,8 +6,9 @@ import scala.util.matching.Regex
 
 /** Source scan: session conf is written only by [[Confs]] (scoped,
   * restored) and [[Tables]] (the sticky events-timestamp read conf),
-  * and only [[graft.streaming.StreamRun]] drains a stream — so every
-  * other query scopes its conf and stops its stream the same way.
+  * only [[graft.streaming.StreamRun]] drains a stream, and only
+  * [[Tables.parquet]] reads parquet — so every other query scopes its
+  * conf, stops its stream and reads a schema the same way.
   */
 class ConfScopeSpec extends AnyFunSuite {
   private val root = java.nio.file.Paths.get("src/main/scala")
@@ -36,6 +37,14 @@ class ConfScopeSpec extends AnyFunSuite {
   test("only Confs and Tables set or unset session conf") {
     val hits = offenders("""conf\s*\.\s*(set|unset)\s*\(""".r,
       Set("graft/Confs.scala", "graft/Tables.scala"))
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("only Tables reads parquet") {
+    // Tables.parquet memoizes the inferred schema; a direct batch read
+    // runs a footer-inference job on every call
+    val hits = offenders("""\.read\b.*\.parquet\s*\(""".r,
+      Set("graft/Tables.scala"))
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 

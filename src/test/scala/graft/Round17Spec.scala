@@ -55,9 +55,41 @@ class Round17Spec extends AnyFunSuite {
     } finally TmpTrees.delete(root)
   }
 
+  /** One q342 run shared by the tests below: its rows, and the task
+    * count of every stage it submitted. */
+  private lazy val q342Run: (Array[(String, String, String)], Seq[Int]) = {
+    val sc = spark.sparkContext
+    val prop = "graft.round17Spec"
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (e.properties != null && e.properties.getProperty(prop) == "q342")
+          tasks.add(e.stageInfo.numTasks)
+    }
+    sc.addSparkListener(l)
+    sc.setLocalProperty(prop, "q342")
+    try {
+      val rows = QueriesCycle.q342RunnerCycle(spark, sf001).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2)))
+      org.apache.spark.sql.graftshim.ColumnBridge.drainListenerBus(sc)
+      import scala.jdk.CollectionConverters._
+      (rows, tasks.asScala.toSeq)
+    } finally {
+      sc.setLocalProperty(prop, null)
+      sc.removeSparkListener(l)
+    }
+  }
+
+  test("no stage of a q342 run has more tasks than the narrowed width") {
+    val width = Confs.narrow(spark, 8)._2.toInt
+    val tasks = q342Run._2
+    assert(tasks.nonEmpty)
+    assert(tasks.max <= width, s"stage task counts: ${tasks.sorted.reverse}")
+  }
+
   test("q342 cycle output holds its cross-table wiring invariants") {
-    val rows = QueriesCycle.q342RunnerCycle(spark, sf001).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2)))
+    val rows = q342Run._1
     def of(t: String) = rows.filter(_._1 == t)
     val nCust = Tables.customer(spark, sf001).count()
     val n23 = Tables.customer(spark, sf001)

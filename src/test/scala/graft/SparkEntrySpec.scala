@@ -43,8 +43,8 @@ class SparkEntrySpec extends AnyFunSuite {
     */
   private val rowsOnlyWhy: Map[String, String] = Map(
     // q36/q37/q38/q42 (xxhash64-native duplicates of hash-gated md5
-    // twins) were retired from the declared surface in r17 — their
-    // implementations remain spec-gated plan-shape variants.
+    // twins) are not declared; their query defs are deleted and the
+    // xxhash64 operators they wrapped stay spec-gated.
     "q46_ivf_topk" -> ("kmeans-trained centroids (iteration order not " +
       "SQL); recall gated against exact q40 in OperatorsSpec"),
     "q48_compression" -> ("java.util.zip Deflater ratios are " +
