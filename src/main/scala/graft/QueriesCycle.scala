@@ -443,19 +443,6 @@ object QueriesCycle {
         .as("um_campus_descr"),
       concat(lit("CL"), col("nk") % 3).as("um_college"),
       concat(lit("CLD"), col("nk") % 3).as("um_college_descr"))
-    val affEntries = cust.select(
-      col("c").cast("string").as("emplid"),
-      col("nk").cast("string").as("deptid"),
-      lit("A1").as("um_affiliate_id"),
-      lit("9401").as("um_affil_relation"),
-      ts(T0).as("effdt"),
-      lit("A").as("status"),
-      lit("C").as("status_flg"),
-      lit("t").as("title"),
-      concat(lit("D"), col("nk")).as("deptid_descr"),
-      lit("CL0").as("um_college"), lit("CLD0").as("um_college_descr"),
-      lit("TXXX").as("um_campus"), lit("TC").as("um_campus_descr"))
-      .limit(0)
     lazy val deptOrg = nation.filter(col("nk") =!= 23)
       .select(col("nk").cast("string").as("deptid"),
         concat(lit("DIM"), col("nk")).as("pure_org_id"))
@@ -488,6 +475,19 @@ object QueriesCycle {
     def cached(tag: String, df: => DataFrame): DataFrame =
       FeedCache.frame(s, dir, s"${tag}_${custMod}_$ordsMod")(df)
     val emp = cached("emp", empEntries)
+    // empty shapes, projected off the memoized emp frame so that no
+    // table load is forced on a hit
+    val affEntries = emp.select(col("emplid"), col("deptid"),
+      lit("A1").as("um_affiliate_id"),
+      lit("9401").as("um_affil_relation"),
+      ts(T0).as("effdt"),
+      lit("A").as("status"),
+      lit("C").as("status_flg"),
+      lit("t").as("title"),
+      concat(lit("D"), col("deptid")).as("deptid_descr"),
+      lit("CL0").as("um_college"), lit("CLD0").as("um_college_descr"),
+      lit("TXXX").as("um_campus"), lit("TC").as("um_campus_descr"))
+      .limit(0)
     Runner.CycleInputs(
       demogHistory = cached("demog", demog), scival = cached("scival", scival),
       empEntries = emp,
@@ -563,12 +563,14 @@ object QueriesCycle {
     * materialized union. Semantics-free like every mat hook
     * (Round17Spec pins identity ≡ checkpoint).
     *
-    * The union is coalesced (a narrow dependency) to the session's
-    * shuffle width, which the callers' scopes narrow, before the cut:
-    * it has one partition per branch partition, and each of its tasks
-    * deserializes the whole 14-branch task binary (~77 ms on a 4-vCPU
-    * VM), in the cut and again in the sort's map stage (q342 at
-    * sf0.01: 50 tasks each → 8).
+    * The union is coalesced before the cut: it has one partition per
+    * branch partition, and each of its tasks deserializes the whole
+    * 14-branch task binary (~77 ms on a 4-vCPU VM), in the cut and
+    * again in the sort's map stage (q342 at sf0.01: 50 tasks each →
+    * 8). The coalesce is a narrow dependency, so it also sets the
+    * task count of every live branch back to its last shuffle: its
+    * width is the session's shuffle width (narrowed by the callers'
+    * scopes) but never fewer than one task per core.
     */
   private def serializeOutputs(out: Runner.CycleOutputs,
       mat: DataFrame => DataFrame = identity): DataFrame = {
@@ -634,7 +636,9 @@ object QueriesCycle {
         col("persons_in_dept"), col("um_college"), col("um_college_descr"),
         col("um_campus"), col("um_campus_descr")))
     val union = parts.reduce(_.unionByName(_))
-    val width = union.sparkSession.conf.get(Confs.ShufflePartitions).toInt
+    val width = math.max(
+      union.sparkSession.conf.get(Confs.ShufflePartitions).toInt,
+      union.sparkSession.sparkContext.defaultParallelism)
     mat(PlanSpy.spy("serialize_union_premat", union.coalesce(width)))
       .orderBy("tbl", "k", "v")
   }

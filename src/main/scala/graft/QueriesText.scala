@@ -467,9 +467,9 @@ object QueriesText {
       // 100 TB the same knob sizes UP with batch volume.
       Confs.scoped(s, Confs.narrow(s, 4)) {
         graft.streaming.DedupStream.run(s, src, ckp, idx, dcs, prs,
-          "doc_id", "text", shingleLen = 3, numHashes = 16, bands = 4,
-          threshold = 0.8, docsSchema = Some(Tables.parquet(s, docsBase)
-            .select("doc_id", "text").schema))
+          "doc_id", "text", Tables.parquet(s, docsBase)
+            .select("doc_id", "text").schema,
+          shingleLen = 3, numHashes = 16, bands = 4, threshold = 0.8)
       }
       // materialize the union BEFORE the finally deletes the temp
       // tree, so the returned frame doesn't dangle on deleted files;

@@ -43,7 +43,13 @@ object Tables {
     * schedules no job. Only metadata is memoized: every call builds a
     * fresh scan, so pruning and pushdown are unchanged, and new files
     * are listed. A path the key cannot list (a glob, a missing path)
-    * falls through to the plain read.
+    * falls through to the plain read. The key costs one serial driver
+    * listing of the tree on top of Spark's own, paid on every call: a
+    * read of a directory that is new every run (a stream source, a
+    * run-private store) gains nothing from the memo and pays it too.
+    * On a 4-vCPU VM a miss costs 120 ms against a plain read's 105 ms
+    * on a 200-file directory (a hit 41 ms), and 395 ms against 260 ms
+    * on a 2000-file one (a hit 301 ms).
     */
   def parquet(s: SparkSession, path: String): DataFrame =
     schemaKey(s, path) match {
@@ -69,13 +75,17 @@ object Tables {
       val root = new org.apache.hadoop.fs.Path(path)
       val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
       val prefix = fs.makeQualified(root).toString
-      val files = fs.listFiles(root, true)
       val listing = Seq.newBuilder[String]
-      while (files.hasNext) {
-        val f = files.next()
-        listing += s"${f.getPath.toString.stripPrefix(prefix)}|${f.getLen}" +
-          s"|${f.getModificationTime}"
-      }
+      // plain listStatus, not listFiles: its LocatedFileStatus copies
+      // each file's permissions, which the local file system loads by
+      // forking a process per file (~4 ms each)
+      def walk(p: org.apache.hadoop.fs.Path): Unit =
+        fs.listStatus(p).foreach { f =>
+          if (f.isDirectory) walk(f.getPath)
+          else listing += s"${f.getPath.toString.stripPrefix(prefix)}" +
+            s"|${f.getLen}|${f.getModificationTime}"
+        }
+      walk(root)
       val confs = s.conf.getAll.toSeq.filter { case (k, _) =>
         schemaConfs.exists(k.startsWith) }.sorted
       val md5 = java.security.MessageDigest.getInstance("MD5")

@@ -34,8 +34,9 @@ object DedupStream {
     * against the band index rooted at `indexDir` (pre-seeded with the
     * corpus bands under `batch_id=base`; corpus raw docs under
     * `docsDir/batch_id=base`), writing pair sets under `pairsDir`.
-    * `docsSchema` (idCol, textCol) spares the footer read of
-    * `docsDir` when the caller already holds it.
+    * `docsSchema` is the (idCol, textCol) schema of the source docs:
+    * the caller takes it off a stable directory, since a footer read
+    * of the run-private `docsDir` would infer it anew every run.
     */
   def run(
       spark: SparkSession,
@@ -46,13 +47,12 @@ object DedupStream {
       pairsDir: String,
       idCol: String,
       textCol: String,
+      docsSchema: org.apache.spark.sql.types.StructType,
       shingleLen: Int = 3,
       numHashes: Int = 16,
       bands: Int = 4,
       threshold: Double = 0.6,
-      maxFilesPerTrigger: Int = 1,
-      docsSchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : Unit = {
+      maxFilesPerTrigger: Int = 1): Unit = {
     // Store↔checkpoint identity guard: the stream's identity is its
     // checkpoint id (STABLE across legitimate restarts from the same
     // checkpoint); the store remembers which stream built it. Batch-id
@@ -105,9 +105,7 @@ object DedupStream {
       java.nio.file.Files.createDirectories(marker.getParent)
       java.nio.file.Files.writeString(marker, streamId)
     }
-    val schema = docsSchema.getOrElse(
-      graft.Tables.parquet(spark, docsDir).select(idCol, textCol).schema)
-    val stream = spark.readStream.schema(schema)
+    val stream = spark.readStream.schema(docsSchema)
       // one file per micro-batch by default: each ingest drop probes
       // the index BEFORE being folded in, the daily-ingest cadence
       .option("maxFilesPerTrigger", maxFilesPerTrigger)

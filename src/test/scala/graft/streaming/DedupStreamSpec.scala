@@ -15,6 +15,9 @@ import graft.operators.Dedup
 class DedupStreamSpec extends AnyFunSuite {
   import spark.implicits._
 
+  private def docsSchema(dcs: String) =
+    graft.Tables.parquet(spark, dcs).select("doc_id", "text").schema
+
   test("streamed batches find the same pairs as one-shot incremental") {
     import java.nio.file.Files
     val src = Files.createTempDirectory("dd-src").toString
@@ -40,7 +43,8 @@ class DedupStreamSpec extends AnyFunSuite {
     fresh.filter("doc_id % 2 = 1").coalesce(1)
       .write.mode("append").parquet(src)
     DedupStream.run(spark, src, ckp, idx, dcs, prs, "doc_id", "text",
-      shingleLen = 3, numHashes = 16, bands = 4, threshold = 0.7)
+      docsSchema(dcs), shingleLen = 3, numHashes = 16, bands = 4,
+      threshold = 0.7)
 
     val streamed = spark.read.parquet(prs)
       .select("id_a", "id_b", "jaccard")
@@ -67,12 +71,14 @@ class DedupStreamSpec extends AnyFunSuite {
     val ckp2 = Files.createTempDirectory("dd-ckp2").toString
     val e = intercept[IllegalArgumentException] {
       DedupStream.run(spark, src, ckp2, idx, dcs, prs, "doc_id", "text",
-        shingleLen = 3, numHashes = 16, bands = 4, threshold = 0.7)
+        docsSchema(dcs), shingleLen = 3, numHashes = 16, bands = 4,
+        threshold = 0.7)
     }
     assert(e.getMessage.contains("built by stream"), e.getMessage)
     // while the ORIGINAL checkpoint restarts cleanly (no new input)
     DedupStream.run(spark, src, ckp, idx, dcs, prs, "doc_id", "text",
-      shingleLen = 3, numHashes = 16, bands = 4, threshold = 0.7)
+      docsSchema(dcs), shingleLen = 3, numHashes = 16, bands = 4,
+      threshold = 0.7)
   }
 
   test("store identity is paired with the checkpoint BEFORE any batch commits") {
@@ -92,7 +98,8 @@ class DedupStreamSpec extends AnyFunSuite {
     Dedup.minhashBandIndexPortable(corpus, "doc_id", "text", 3, 16, 4)
       .write.parquet(s"$idx/batch_id=base")
     corpus.write.parquet(s"$dcs/batch_id=base")
-    DedupStream.run(spark, src, ckp, idx, dcs, prs, "doc_id", "text")
+    DedupStream.run(spark, src, ckp, idx, dcs, prs, "doc_id", "text",
+      docsSchema(dcs))
     val marker = Paths.get(idx, "_stream_id")
     assert(Files.exists(marker), "marker missing after zero-batch run")
     val markerId = Files.readString(marker).trim
@@ -100,7 +107,8 @@ class DedupStreamSpec extends AnyFunSuite {
     assert(meta.contains(markerId),
       s"marker $markerId not the checkpoint's id: $meta")
     // and the pairing holds on restart (same checkpoint + same store)
-    DedupStream.run(spark, src, ckp, idx, dcs, prs, "doc_id", "text")
+    DedupStream.run(spark, src, ckp, idx, dcs, prs, "doc_id", "text",
+      docsSchema(dcs))
   }
 
   test("a store-identity mismatch stops the query before rethrowing") {
@@ -119,7 +127,8 @@ class DedupStreamSpec extends AnyFunSuite {
       s"""{"note":{"id":"decoy"},"id":"${java.util.UUID.randomUUID()}"}""")
     Files.writeString(Paths.get(idx, "_stream_id"), "decoy")
     val e = intercept[AssertionError] {
-      DedupStream.run(spark, src, ckp, idx, dcs, prs, "doc_id", "text")
+      DedupStream.run(spark, src, ckp, idx, dcs, prs, "doc_id", "text",
+        docsSchema(dcs))
     }
     assert(e.getMessage.contains("!= expected stream id decoy"))
     assert(spark.streams.active.isEmpty)
