@@ -570,7 +570,8 @@ object QueriesCycle {
     * 8). The coalesce is a narrow dependency, so it also sets the
     * task count of every live branch back to its last shuffle: its
     * width is the session's shuffle width (narrowed by the callers'
-    * scopes) but never fewer than one task per core.
+    * scopes) but never fewer than one task per core. It groups by
+    * partition index ([[coalesceByIndex]]), not by locality.
     */
   private def serializeOutputs(out: Runner.CycleOutputs,
       mat: DataFrame => DataFrame = identity): DataFrame = {
@@ -635,12 +636,43 @@ object QueriesCycle {
         col("jobcode_descr"), col("deptid"), col("deptid_descr"),
         col("persons_in_dept"), col("um_college"), col("um_college_descr"),
         col("um_campus"), col("um_campus_descr")))
-    val union = parts.reduce(_.unionByName(_))
+    val union = PlanSpy.spy("serialize_union_premat",
+      parts.reduce(_.unionByName(_)))
     val width = math.max(
       union.sparkSession.conf.get(Confs.ShufflePartitions).toInt,
       union.sparkSession.sparkContext.defaultParallelism)
-    mat(PlanSpy.spy("serialize_union_premat", union.coalesce(width)))
-      .orderBy("tbl", "k", "v")
+    mat(coalesceByIndex(union, width)).orderBy("tbl", "k", "v")
+  }
+
+  /** `df` in at most `n` partitions, partition i in group i % n.
+    * `Dataset.coalesce` groups partitions by their preferred locations,
+    * and a lazily checkpointed boundary reports its cached blocks once
+    * some job has computed it and its lineage's locations before. So
+    * the serialize union's groups followed whichever boundaries had
+    * run when the cut was planned, and changed from cycle to cycle:
+    * the stage's longest task with them, and whether the sort's range
+    * sampler ran its extra re-sampling job for an oversized group. The
+    * plan is run here, as the cut's own action would run it under AQE
+    * (its shuffle stages now, its last stage lazily).
+    */
+  private[graft] def coalesceByIndex(df: DataFrame, n: Int): DataFrame = {
+    val rows = df.queryExecution.toRdd
+      .coalesce(n, shuffle = false, Some(ByIndex))
+    org.apache.spark.sql.graftshim.ColumnBridge
+      .fromInternalRows(df.sparkSession, rows, df.schema)
+  }
+
+  private object ByIndex extends org.apache.spark.rdd.PartitionCoalescer
+      with Serializable {
+    def coalesce(maxPartitions: Int, parent: org.apache.spark.rdd.RDD[_])
+        : Array[org.apache.spark.rdd.PartitionGroup] = {
+      val groups = Array.fill(
+        math.min(maxPartitions, parent.partitions.length))(
+        new org.apache.spark.rdd.PartitionGroup())
+      parent.partitions.foreach(p =>
+        groups(p.index % groups.length).partitions += p)
+      groups
+    }
   }
 
 

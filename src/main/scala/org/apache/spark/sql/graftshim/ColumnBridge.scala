@@ -29,6 +29,18 @@ object ColumnBridge {
     org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
       .normalize(e)
 
+  /** A DataFrame over rows that are already catalyst rows of `schema`
+    * (`internalCreateDataFrame` is private[sql]): no plan rule reaches
+    * below it, so an RDD-level cut stays as built.
+    */
+  def fromInternalRows(spark: org.apache.spark.sql.SparkSession,
+      rows: org.apache.spark.rdd.RDD[
+        org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema, isStreaming = false)
+
   /** The analyzed logical plan behind a DataFrame. */
   def logicalPlan(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =

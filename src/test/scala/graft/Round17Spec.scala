@@ -90,6 +90,17 @@ class Round17Spec extends AnyFunSuite {
     assert(tasks.max <= width, s"stage task counts: ${tasks.sorted.reverse}")
   }
 
+  test("the serialize cut groups partitions by index, not by locality") {
+    // partition i of a 10-way frame lands in output partition i % 4
+    val groups = QueriesCycle.coalesceByIndex(
+        spark.range(0, 10, 1, 10).toDF("id"), 4).rdd
+      .mapPartitionsWithIndex((g, it) => it.map(r => (g, r.getLong(0))))
+      .collect().groupBy(_._1)
+      .map { case (g, xs) => g -> xs.map(_._2).sorted.toSeq }
+    assert(groups ==
+      (0 until 4).map(g => g -> (g.toLong until 10L by 4L)).toMap)
+  }
+
   test("q342 cycle output holds its cross-table wiring invariants") {
     val rows = q342Run._1
     def of(t: String) = rows.filter(_._1 == t)
