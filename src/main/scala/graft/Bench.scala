@@ -110,7 +110,7 @@ object Bench {
     med > 0 && hist > 0 && med > 1.5 * hist && med - hist > 0.25
 
   /** The run's core context for every emitted line: the requested
-    * `SPARK_GRAFT_CPUS` (a number: it also sets the shuffle width), the
+    * core count ([[Sessions.cpus]]; it also sets the shuffle width), the
     * master the session really got, and its `defaultParallelism` — so
     * an 8- vs 32-core run can be told apart from the tail line alone. */
   private[graft] def runContext(cpus: String, master: String,
@@ -130,7 +130,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // QUIET-BOX GUARD (round-16 finding: the official run started under
     // loadavg 14.2 from unrelated processes and 13 queries needed
     // isolated repair). Sampled BEFORE the session builds — at this
@@ -181,23 +180,7 @@ object Bench {
         require(i > 0, s"SPARK_GRAFT_EXTRA_CONF entry not k=v: $kv")
         (kv.take(i), kv.drop(i + 1))
       }
-    val spark = extraConf.foldLeft(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // see Verify.scala: Spark 4.1's union-partitioning claim is
-      // invalid for concatenating unions and breaks downstream joins
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .config("spark.sql.adaptive.enabled", "true")) {
-        case (b, (k, v)) => b.config(k, v)
-      }
-      // 63 queries × several codegen'd stages each blows through the
-      // default 100-entry generated-class cache, so every pass
-      // re-compiles regexp-heavy plans (measured: q30 6.0 s cold vs
-      // 0.8 s warm). Static conf — must be set before the session.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(extra = extraConf)
     spark.sparkContext.setLogLevel("WARN")
     // NOTE for log readers: any "WindowExec: No Partition Defined"
     // warnings in this bench's output come from three documented
@@ -477,7 +460,7 @@ object Bench {
     val sc = spark.sparkContext
     val guard =
       s""","loadavg":"$loadBoot;$loadStart;$loadEnd","contended":$contended$acceptJson,"suspect":${strArr(stillSuspect)}$unstableJson$histJson$isolatedJson""" +
-        runContext(cpus, sc.master, sc.defaultParallelism)
+        runContext(Sessions.cpus.toString, sc.master, sc.defaultParallelism)
     def line(rs: Seq[(String, Double)], extra: String): String =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":${qsJson(rs)},"sf":"$sfDir","passes":$passes$guard$extra}"""
     val fullLine = line(results, "")

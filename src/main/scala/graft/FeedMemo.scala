@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Process-lifetime parquet memo of DERIVED INPUT renders (round 19 —
-  * the generalization of the cycle gates' FeedCache, VERDICT r18
+  * the generalization of the cycle gates' feed memo, VERDICT r18
   * item 4): streaming gates replay deterministic slices of the base
   * tables as file feeds, and re-rendering the same slice files on
   * every bench pass cost one single-task Spark write job per slice per
@@ -92,7 +92,7 @@ object FeedMemo {
     }
   }
 
-  /** Memoized parquet frame read-back (the FeedCache.frame shape);
+  /** Memoized parquet frame read-back (the cycle gates' feeds);
     * a repeat read schedules no job ([[Tables.parquet]]). */
   def frame(s: SparkSession, dataDir: String, key: String)(
       build: => DataFrame): DataFrame =

@@ -7,8 +7,9 @@ import graft.functions._
 
 /** Session extensions registering the engine's custom Catalyst
   * expressions for SQL use. Attach with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.GraftExtensions`; after that e.g.
+  * `spark.sql.extensions=graft.GraftExtensions` (e.g. as an `extra`
+  * conf of [[Sessions.local]]) or a builder's
+  * `withExtensions(new GraftExtensions)`; after that e.g.
   * `SELECT rolling_winnow(text, 8, 4), simhash64(text) FROM docs`
   * plans natively — the full custom-expression surface, not just the
   * DataFrame API, so SQL-only consumers (views, the q22/q120/q146

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Physical-plan audit over the whole query surface: for each query,
   * report scan pushdown (PushedFilters / ReadSchema width), join
   * strategies, shuffle (Exchange) count, and whole-stage-codegen span
@@ -10,14 +8,10 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE wraps the plan lazily and hides scan details + codegen
-      // markers from toString; disable it for a static audit
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // AQE wraps the plan lazily and hides scan details + codegen
+    // markers from toString; disable it for a static audit
+    val spark = Sessions.local(
+      extra = Seq("spark.sql.adaptive.enabled" -> "false"))
     spark.sparkContext.setLogLevel("ERROR")
 
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {

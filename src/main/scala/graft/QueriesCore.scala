@@ -851,7 +851,7 @@ object QueriesCore {
   def q93StreamWindowCounts(s: SparkSession, dir: String): DataFrame = {
     // ts is re-written AS READ (nanos-long or micros-timestamp —
     // whatever the testdata generation encodes); readEvents below
-    // infers the on-disk shape from the footer and normalizes.
+    // takes the on-disk shape off a slice's memo dir and normalizes.
     val raw = Tables.eventsRaw(s, s"$dir/events.parquet")
     val root = java.nio.file.Files.createTempDirectory("q93-stream").toString
     val src = s"$root/src"
@@ -859,7 +859,7 @@ object QueriesCore {
     // graft.FeedMemo): re-rendering identical feed files per bench
     // pass was one single-task write job per slice per pass; the
     // replayed slice is a second COPY of the same render
-    Seq(0, 1, 2, 1).zipWithIndex.foreach { case (r, i) =>
+    val slices = Seq(0, 1, 2, 1).zipWithIndex.map { case (r, i) =>
       FeedMemo.copySlice(dir, s"q93_s$r", src,
         1000000000000L + i * 60000L, nameSuffix = s"_d$i") {
         raw.filter(pmod(col("event_id"), lit(3)) === r)
@@ -868,7 +868,8 @@ object QueriesCore {
     val name = java.nio.file.Paths.get(root).getFileName.toString
       .replaceAll("[^A-Za-z0-9_]", "_")
     val stream = graft.streaming.EventsStream
-      .readEvents(s, src, maxFilesPerTrigger = Some(1))
+      .readEvents(s, src, Tables.eventsRaw(s, slices.head).schema,
+        maxFilesPerTrigger = Some(1))
       .withColumn("value", col("value").cast("decimal(18,2)"))
     try StreamRun.toMemory(s, name) {
       graft.streaming.EventsStream.windowedCounts(stream,
@@ -982,19 +983,19 @@ object QueriesCore {
     // place arrival order changes the answer — each memoized slice
     // copy is stamped with a strictly increasing synthetic mtime
     // (the renders are memoized once per process — graft.FeedMemo).
-    bounds.sliding(2).zipWithIndex.foreach {
+    val slices = bounds.sliding(2).zipWithIndex.collect {
       case (Seq(a, b), i) =>
         FeedMemo.copySlice(dir, s"q105_s$i", src, 1000000000000L + i * 60000L) {
           raw.filter(col("ts") >= lit(a).cast("timestamp") &&
             col("ts") < lit(b).cast("timestamp"))
         }
-      case _ => ()
-    }
+    }.toList
     val name = java.nio.file.Paths.get(root).getFileName.toString
       .replaceAll("[^A-Za-z0-9_]", "_")
     try StreamRun.toMemory(s, name) {
       val events = graft.streaming.EventsStream
-        .readEvents(s, src, maxFilesPerTrigger = Some(1))
+        .readEvents(s, src, Tables.eventsRaw(s, slices.head).schema,
+          maxFilesPerTrigger = Some(1))
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
         .as(org.apache.spark.sql.Encoders
@@ -1210,7 +1211,7 @@ object QueriesCore {
       .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
     val root = java.nio.file.Files.createTempDirectory("q119-stream").toString
     val src = s"$root/src"
-    Seq(0, 1, 2).foreach { r =>
+    val slices = Seq(0, 1, 2).map { r =>
       FeedMemo.copySlice(dir, s"q119_s$r", src, 1000000000000L + r * 60000L) {
         ev.filter(pmod(col("event_id"), lit(3)) === r)
       }
@@ -1218,10 +1219,10 @@ object QueriesCore {
     val name = java.nio.file.Paths.get(root).getFileName.toString
       .replaceAll("[^A-Za-z0-9_]", "_")
     try StreamRun.toMemory(s, name) {
-      // one footer read for both sources
-      val onDisk = Tables.eventsRaw(s, src).schema
-      def read() = graft.streaming.EventsStream.readEvents(s, src,
-        maxFilesPerTrigger = Some(1), schemaHint = Some(onDisk))
+      // one schema for both sources, read off a memo dir
+      val onDisk = Tables.eventsRaw(s, slices.head).schema
+      def read() = graft.streaming.EventsStream.readEvents(s, src, onDisk,
+        maxFilesPerTrigger = Some(1))
       val errors = read().filter(col("event_type") === "error")
         .select(col("user_id"), col("event_id").as("error_id"),
           col("ts").as("ets"))
@@ -1390,7 +1391,7 @@ object QueriesCore {
       .localCheckpoint(true)
     val root = java.nio.file.Files.createTempDirectory("q128-stream").toString
     val src = s"$root/src"
-    Seq(0, 1, 2).foreach { r =>
+    val slices = Seq(0, 1, 2).map { r =>
       FeedMemo.copySlice(dir, s"q128_s$r", src, 1000000000000L + r * 60000L) {
         ev.filter(pmod(col("event_id"), lit(3)) === r)
       }
@@ -1399,7 +1400,8 @@ object QueriesCore {
       .replaceAll("[^A-Za-z0-9_]", "_")
     try StreamRun.toMemory(s, name) {
       graft.streaming.EventsStream
-        .readEvents(s, src, maxFilesPerTrigger = Some(1))
+        .readEvents(s, src, Tables.eventsRaw(s, slices.head).schema,
+          maxFilesPerTrigger = Some(1))
         .withColumn("value", col("value").cast("decimal(18,2)"))
         .join(broadcast(tiers), "user_id")
         .groupBy(col("tier"), col("event_type"))
@@ -1716,16 +1718,8 @@ object QueriesCore {
         .repartition(64).write.mode("overwrite").parquet(s"$root/frag")
       val nOut = graft.operators.Scale.compact(
         s, s"$root/frag", s"$root/compact", targetBytes = 4L << 20)
-      val outFiles = {
-        val p = new org.apache.hadoop.fs.Path(s"$root/compact")
-        val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        val it = fs.listFiles(p, true)
-        var n = 0
-        while (it.hasNext) {
-          if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-        }
-        n
-      }
+      val outFiles = Tables.filesUnder(s, s"$root/compact")
+        .count(_.getPath.getName.endsWith(".parquet"))
       Tables.parquet(s, s"$root/compact")
         .agg(count(lit(1)).as("n_rows"),
           count_distinct(col("l_orderkey")).as("n_orders"),
@@ -1959,7 +1953,7 @@ object QueriesCore {
       .select(col("c_custkey"), col("c_mktsegment"))
     val root = java.nio.file.Files.createTempDirectory("q246-stream").toString
     val src = s"$root/src"
-    Seq(0, 1, 2).foreach { r =>
+    val slices = Seq(0, 1, 2).map { r =>
       FeedMemo.copySlice(dir, s"q246_s$r", src, 1000000000000L + r * 60000L) {
         ev.filter(pmod(col("event_id"), lit(3)) === r)
       }
@@ -1968,7 +1962,8 @@ object QueriesCore {
       .replaceAll("[^A-Za-z0-9_]", "_")
     try StreamRun.toMemory(s, name) {
       graft.streaming.EventsStream
-        .readEvents(s, src, maxFilesPerTrigger = Some(1))
+        .readEvents(s, src, Tables.eventsRaw(s, slices.head).schema,
+          maxFilesPerTrigger = Some(1))
         .join(broadcast(dim), col("user_id") === col("c_custkey"))
         .select(col("user_id"), col("event_id"), col("event_type"),
           col("c_mktsegment"))
@@ -2638,7 +2633,7 @@ object QueriesCore {
     val root = java.nio.file.Files
       .createTempDirectory("q273-stream").toString
     val src = s"$root/src"
-    Seq(0, 1, 2).foreach { r =>
+    val slices = Seq(0, 1, 2).map { r =>
       FeedMemo.copySlice(dir, s"q273_s$r", src, 1000000000000L + r * 60000L) {
         ev.filter(pmod(col("event_id"), lit(3)) === r)
       }
@@ -2647,7 +2642,8 @@ object QueriesCore {
       .replaceAll("[^A-Za-z0-9_]", "_")
     try StreamRun.toMemory(s, name) {
       graft.streaming.EventsStream
-        .readEvents(s, src, maxFilesPerTrigger = Some(1))
+        .readEvents(s, src, Tables.eventsRaw(s, slices.head).schema,
+          maxFilesPerTrigger = Some(1))
         .select(col("event_type"),
           graft.operators.Scale.md5Prefix32(col("user_id")).as("__h"))
         .select(col("event_type"),
@@ -3283,7 +3279,7 @@ object QueriesCore {
     val root = java.nio.file.Files.createTempDirectory("q261-stream")
       .toString
     val src = s"$root/src"
-    Seq(0, 1, 2).foreach { r =>
+    val slices = Seq(0, 1, 2).map { r =>
       FeedMemo.copySlice(dir, s"q261_s$r", src, 1000000000000L + r * 60000L) {
         ev.filter(pmod(col("event_id"), lit(3)) === r)
       }
@@ -3292,7 +3288,8 @@ object QueriesCore {
       .replaceAll("[^A-Za-z0-9_]", "_")
     try StreamRun.toMemory(s, name) {
       graft.streaming.EventsStream
-        .readEvents(s, src, maxFilesPerTrigger = Some(1))
+        .readEvents(s, src, Tables.eventsRaw(s, slices.head).schema,
+          maxFilesPerTrigger = Some(1))
         .groupBy(col("ts").cast("date").as("day"))
         .agg(count(lit(1)).as("n"))
         .writeStream.outputMode("complete")
@@ -3917,7 +3914,7 @@ object QueriesCore {
     val root = java.nio.file.Files
       .createTempDirectory("q168-stream").toString
     val src = s"$root/src"
-    Seq(0, 1, 2).foreach { r =>
+    val slices = Seq(0, 1, 2).map { r =>
       FeedMemo.copySlice(dir, s"q168_s$r", src, 1000000000000L + r * 60000L) {
         ev.filter(pmod(col("event_id"), lit(3)) === r)
       }
@@ -3926,7 +3923,8 @@ object QueriesCore {
       .replaceAll("[^A-Za-z0-9_]", "_")
     try StreamRun.toMemory(s, name) {
       graft.streaming.EventsStream
-        .readEvents(s, src, maxFilesPerTrigger = Some(1))
+        .readEvents(s, src, Tables.eventsRaw(s, slices.head).schema,
+          maxFilesPerTrigger = Some(1))
         .withColumn("__v", col("value").cast("decimal(18,2)"))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("__v")).as("total"),
@@ -5755,20 +5753,20 @@ object QueriesCore {
     val root = java.nio.file.Files.createTempDirectory("q223-stream").toString
     val src = s"$root/src"
     val bounds = Seq("1900-01-01", "2024-01-11", "2024-01-21", "2100-01-01")
-    bounds.sliding(2).zipWithIndex.foreach {
+    val slices = bounds.sliding(2).zipWithIndex.collect {
       case (Seq(a, b), i) =>
         // memoized render + pinned mtime order (graft.FeedMemo)
         FeedMemo.copySlice(dir, s"q223_s$i", src, 1000000000000L + i * 60000L) {
           raw.filter(col("ts") >= lit(a).cast("timestamp") &&
             col("ts") < lit(b).cast("timestamp"))
         }
-      case _ => ()
-    }
+    }.toList
     val name = java.nio.file.Paths.get(root).getFileName.toString
       .replaceAll("[^A-Za-z0-9_]", "_")
     try StreamRun.toMemory(s, name) {
       val events = graft.streaming.EventsStream
-        .readEvents(s, src, maxFilesPerTrigger = Some(1))
+        .readEvents(s, src, Tables.eventsRaw(s, slices.head).schema,
+          maxFilesPerTrigger = Some(1))
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
         .as(org.apache.spark.sql.Encoders

@@ -101,7 +101,7 @@ object QueriesCycle {
     * k-bounded control flow, same posture as the Bloom sketch fold.
     */
   private[graft] def salts(s: SparkSession, dir: String): (Long, Long) =
-    FeedCache.salts(dir) {
+    saltsMemo.synchronized(saltsMemo.getOrElseUpdate(dir, {
       val cS = Tables.customer(s, dir)
         .agg(coalesce(sum((col("c_nationkey") + lit(1)) *
           (col("c_custkey") % 97)), lit(0L)) % 1009)
@@ -111,40 +111,25 @@ object QueriesCycle {
           (col("o_orderkey") % 89)), lit(0L)) % 1009)
         .head.getLong(0)
       (cS, oS)
-    }
+    }))
 
-  /** Process-lifetime parquet memo of the cycle gates' derived feeds,
-    * keyed by (testdata dir, slice) — VERDICT r18 item 4. The four
-    * composition gates (q342/q345/q346/q347) each consume the same
-    * deterministic feed derivations (JSON renders over the base
-    * tables, EDW seed states, HR entry tables); deriving them in
-    * every gate re-ran the big to_json expression trees per gate AND
-    * shipped those trees inside every downstream stage's serialized
-    * task binary (~1.4 MB broadcasts, hundreds of stages per gate).
-    * Building each feed ONCE per process and reading it back as
-    * parquet keeps the gates' pipelines identical (the REAL JSON
-    * documents still come from the real plan — built once — and every
+  /** The cycle gates' derived feeds (JSON renders over the base
+    * tables, EDW seed states, HR entry tables) go through
+    * [[FeedMemo]], keyed by (testdata dir, slice) — VERDICT r18 item
+    * 4: deriving them in every gate re-ran the big to_json expression
+    * trees per gate AND shipped those trees inside every downstream
+    * stage's serialized task binary (~1.4 MB broadcasts, hundreds of
+    * stages per gate). Built once per process and read back as
+    * parquet, the gates' pipelines stay identical (the REAL JSON
+    * documents still come from the real plan, and every
     * parse/validate/shred stage downstream is unchanged) while the
-    * lineage above each gate collapses to a parquet scan. Keyed by
-    * md5 of the dir path so probe/seed worlds can never collide; the
-    * memo dies with the JVM (fresh-seed runs fork a new JVM, so a
-    * regenerated testdata dir can never meet a stale cache).
+    * lineage above each gate collapses to a parquet scan. The salts
+    * are memoized alongside, per dir; both memos die with the JVM
+    * (fresh-seed runs fork a new JVM, so a regenerated testdata dir
+    * can never meet a stale entry).
     */
-  private object FeedCache {
-    private val lock = new Object
-    private val saltsMemo =
-      scala.collection.mutable.HashMap.empty[String, (Long, Long)]
-    def salts(dir: String)(build: => (Long, Long)): (Long, Long) =
-      lock.synchronized(saltsMemo.getOrElseUpdate(dir, build))
-    // the parquet memo machinery is the shared graft.FeedMemo since
-    // round 19 (the streaming gates' slice feeds use the same memo)
-    def frame(s: SparkSession, dir: String, key: String)(
-        build: => DataFrame): DataFrame = FeedMemo.frame(s, dir, key)(build)
-    def path(dir: String, key: String)(build: => DataFrame): String =
-      FeedMemo.path(dir, key)(build)
-    def partFile(memoDir: String): java.nio.file.Path =
-      FeedMemo.partFile(memoDir)
-  }
+  private val saltsMemo =
+    scala.collection.mutable.HashMap.empty[String, (Long, Long)]
 
   /** [[Confs.narrow]]: the cycle's frames are tiny keyed cascades
     * (thousands of rows at bench sf), so 32-wide shuffles pay pure
@@ -152,13 +137,13 @@ object QueriesCycle {
     * still gets proportional parallelism.
     *
     * Also pins unionOutputPartitioning off inside the scope (our own
-    * sessions disable it globally — see Verify.scala — but the gates
+    * sessions disable it globally — see Sessions.scala — but the gates
     * must survive a FOREIGN session too): the cycle's co-partitioned
     * family unions trigger the invalid union-partitioning claim.
     *
     * NOTE (round 20): a 64 MB autoBroadcastJoinThreshold inside this
     * scope was re-tested under the real bench protocol after the par
-    * restructure (an in-JVM CycleProbe warm sequence suggested
+    * restructure (an in-JVM warm probe sequence suggested
     * 4.25 → 3.6 s) and measured DECISIVELY worse — family 35.9 →
     * 63.9 s isolated, q342 4.22 → 11.45 — consistent with r19's
     * sequential-cycle measurement of the same knob. Reverted twice
@@ -467,13 +452,13 @@ object QueriesCycle {
       .toDF("jobcode", "deptid", "profiled")
 
     // data-derived frames go through the process-lifetime parquet
-    // memo (see FeedCache): built once per (dir, slice), read back as
+    // memo (FeedMemo): built once per (dir, slice), read back as
     // plain scans by every gate. Literal/limit(0) frames stay inline.
     // The derived frames above are lazy: on a memo hit their thunks
     // are never forced, so their expression trees (rawPubs' to_json)
     // are never analysed either.
     def cached(tag: String, df: => DataFrame): DataFrame =
-      FeedCache.frame(s, dir, s"${tag}_${custMod}_$ordsMod")(df)
+      FeedMemo.frame(s, dir, s"${tag}_${custMod}_$ordsMod")(df)
     val emp = cached("emp", empEntries)
     // empty shapes, projected off the memoized emp frame so that no
     // table load is forced on a hit
@@ -981,12 +966,12 @@ object QueriesCycle {
     }
 
     Feeds2(
-      FeedCache.frame(s, dir, "f2_riorg")(rawInternalOrgs2),
-      FeedCache.frame(s, dir, "f2_riper")(rawInternalPersons2),
-      FeedCache.frame(s, dir, "f2_rxper")(rawExternalPersons2),
-      FeedCache.frame(s, dir, "f2_rpub")(rawPubs2),
-      FeedCache.frame(s, dir, "f2_xlate")(lateExternalPersons),
-      FeedCache.frame(s, dir, "f2_platep")(latePubs))
+      FeedMemo.frame(s, dir, "f2_riorg")(rawInternalOrgs2),
+      FeedMemo.frame(s, dir, "f2_riper")(rawInternalPersons2),
+      FeedMemo.frame(s, dir, "f2_rxper")(rawExternalPersons2),
+      FeedMemo.frame(s, dir, "f2_rpub")(rawPubs2),
+      FeedMemo.frame(s, dir, "f2_xlate")(lateExternalPersons),
+      FeedMemo.frame(s, dir, "f2_platep")(latePubs))
   }
 
   /** Cycle 1's inputs for the two-cycle gates: the 1/3 slice with the
@@ -1037,7 +1022,7 @@ object QueriesCycle {
     * reads them (`runner.py`'s loop carries nothing in memory). q345
     * mirrors that: cycle 1 runs ONCE per process through the real
     * machinery ([[Runner.syncCycle]] + [[stateAfter]]'s upserts) and
-    * its four state frames persist via [[FeedCache]]; cycle 2 — the
+    * its four state frames persist via [[FeedMemo]]; cycle 2 — the
     * part q345 serializes and the gate hashes — reads them back like
     * the daemon reads its EDW. The hash gate is unchanged (the oracle
     * restates BOTH cycles), so a wrong persisted state still fails;
@@ -1052,11 +1037,11 @@ object QueriesCycle {
     lazy val after = stateAfter(base,
       Runner.syncCycle(base, _.localCheckpoint(false), par = true))
     base.copy(
-      existingOrgs = FeedCache.frame(s, dir, "st1_eorg")(after.existingOrgs),
+      existingOrgs = FeedMemo.frame(s, dir, "st1_eorg")(after.existingOrgs),
       existingPersons =
-        FeedCache.frame(s, dir, "st1_eper")(after.existingPersons),
-      existingPubs = FeedCache.frame(s, dir, "st1_epub")(after.existingPubs),
-      personOrgs = FeedCache.frame(s, dir, "st1_porg")(after.personOrgs))
+        FeedMemo.frame(s, dir, "st1_eper")(after.existingPersons),
+      existingPubs = FeedMemo.frame(s, dir, "st1_epub")(after.existingPubs),
+      personOrgs = FeedMemo.frame(s, dir, "st1_porg")(after.personOrgs))
   }
 
   /** q345 body parameterized on the stage materializer, like
@@ -1145,17 +1130,17 @@ object QueriesCycle {
       // one file per delivery, mtimes stamped a minute apart so the
       // file source's timestamp order can never tie — file order IS
       // delivery order. The delivery render is a deterministic feed
-      // derivation like every other FeedCache frame, so it is written
+      // derivation like every other FeedMemo frame, so it is written
       // ONCE per process (round 19 — two coalesce(1) Spark write jobs
       // per stream pass were pure re-render) and the part file is
       // COPIED into this run's private source dir; the stream still
       // consumes its own files through its own checkpoint.
       def writeCycle(cyc: Int, fams: Seq[(String, DataFrame)]): Unit = {
-        val memo = FeedCache.path(dir, s"delivery_$cyc") {
+        val memo = FeedMemo.path(dir, s"delivery_$cyc") {
           fams.map { case (f, df) => feedRows(cyc, f, df) }
             .reduce(_.unionByName(_))
         }
-        val part = FeedCache.partFile(memo)
+        val part = FeedMemo.partFile(memo)
         val dst = java.nio.file.Paths.get(src,
           s"delivery-$cyc-${part.getFileName}")
         java.nio.file.Files.copy(part, dst)

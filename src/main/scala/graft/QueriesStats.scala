@@ -304,14 +304,15 @@ object QueriesStats {
     // setup, not the data path (see q286's identical note)
     try {
       val src = s"$root/src"
-      Seq(0, 1, 2).foreach { r =>
+      val slices = Seq(0, 1, 2).map { r =>
         FeedMemo.copySlice(dir, s"q281_s$r", src, 1000000000000L + r * 60000L) {
           ev.filter(pmod(col("event_id"), lit(3)) === r)
         }
       }
       StreamRun.toMemory(s, name) {
         graft.streaming.EventsStream
-          .readEvents(s, src, maxFilesPerTrigger = Some(1))
+          .readEvents(s, src, Tables.eventsRaw(s, slices.head).schema,
+            maxFilesPerTrigger = Some(1))
           .select(key(col("event_type"), col("user_id")).as("__k"))
           .select(explode(sequence(lit(0), lit(d - 1))).as("__j"),
             col("__k"))
@@ -579,14 +580,15 @@ object QueriesStats {
     // production streams read an existing source, never this writer.
     try {
       val src = s"$root/src"
-      Seq(0, 1, 2).foreach { r =>
+      val slices = Seq(0, 1, 2).map { r =>
         FeedMemo.copySlice(dir, s"q286_s$r", src, 1000000000000L + r * 60000L) {
           ev.filter(pmod(col("event_id"), lit(3)) === r)
         }
       }
       StreamRun.toMemory(s, name) {
         graft.streaming.EventsStream
-          .readEvents(s, src, maxFilesPerTrigger = Some(1))
+          .readEvents(s, src, Tables.eventsRaw(s, slices.head).schema,
+            maxFilesPerTrigger = Some(1))
           .select(explode(sequence(lit(0), lit(k - 1))).as("__j"),
             col("user_id"))
           .select(bitpos(col("__j"), col("user_id")).as("__p"))
@@ -678,14 +680,15 @@ object QueriesStats {
     // replay — see q281/q286's identical note
     try {
       val src = s"$root/src"
-      Seq(0, 1, 2).foreach { r =>
+      val slices = Seq(0, 1, 2).map { r =>
         FeedMemo.copySlice(dir, s"q333_s$r", src, 1000000000000L + r * 60000L) {
           ev.filter(pmod(col("event_id"), lit(3)) === r)
         }
       }
       StreamRun.toMemory(s, name) {
         graft.streaming.EventsStream
-          .readEvents(s, src, maxFilesPerTrigger = Some(1))
+          .readEvents(s, src, Tables.eventsRaw(s, slices.head).schema,
+            maxFilesPerTrigger = Some(1))
           .select(pmod(col("user_id"), lit(nShards)).cast("int")
             .as("shard"),
             concat(col("event_type"), lit(":"),

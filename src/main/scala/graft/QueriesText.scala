@@ -3061,7 +3061,8 @@ object QueriesText {
       // q79: identical tagged-union counts, add-one smoothing over
       // the shared vocab, DECIMAL(18,6) per-term log-ratios (6dp —
       // far from ln's cross-engine ulp noise), exact numerator sum
-      // cast to double before the one division
+      // cast to double before the one division; both quantizations
+      // floor-based, like q88
       "q79_dsir_weights" ->
         s"""WITH toks AS (
            |  SELECT doc_id,
@@ -3079,15 +3080,16 @@ object QueriesText {
            |               count(*) AS v FROM ts),
            |r AS (
            |  SELECT term,
-           |    CAST(round(ln((ct + 1.0) / (tot.nt + tot.v))
-           |             - ln((cs + 1.0) / (tot.ns + tot.v)), 6)
+           |    CAST(floor((ln((ct + 1.0) / (tot.nt + tot.v))
+           |             - ln((cs + 1.0) / (tot.ns + tot.v))) * 1e6) / 1e6
            |      AS DECIMAL(18,6)) AS lr
            |  FROM ts CROSS JOIN tot),
            |tf AS (
            |  SELECT doc_id, term, count(*) AS tf FROM toks
            |  WHERE t = 0 GROUP BY 1, 2)
            |SELECT tf.doc_id, CAST(sum(tf.tf) AS BIGINT) AS n_tokens,
-           |  round(CAST(sum(tf.tf * r.lr) AS DOUBLE) / sum(tf.tf), 6) AS score
+           |  floor(CAST(sum(tf.tf * r.lr) AS DOUBLE) / sum(tf.tf) * 1e6)
+           |    / 1e6 AS score
            |FROM tf JOIN r USING (term)
            |GROUP BY tf.doc_id ORDER BY tf.doc_id""".stripMargin,
 

@@ -142,14 +142,7 @@ object ScaleProbe {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val work = if (args.length > 1) args(1) else "/root/repo/tmp/scaleprobe"
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local()
     spark.sparkContext.setLogLevel("WARN")
     // Heap sizing gate (round-15 lesson: a 100× probe on the default
     // 8 GB heap died mid-run after 48 GB of working set — local-mode

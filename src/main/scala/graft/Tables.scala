@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
@@ -72,27 +73,35 @@ object Tables {
     */
   private def schemaKey(s: SparkSession, path: String): Option[String] =
     scala.util.Try {
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val prefix = fs.makeQualified(root).toString
-      val listing = Seq.newBuilder[String]
-      // plain listStatus, not listFiles: its LocatedFileStatus copies
-      // each file's permissions, which the local file system loads by
-      // forking a process per file (~4 ms each)
-      def walk(p: org.apache.hadoop.fs.Path): Unit =
-        fs.listStatus(p).foreach { f =>
-          if (f.isDirectory) walk(f.getPath)
-          else listing += s"${f.getPath.toString.stripPrefix(prefix)}" +
-            s"|${f.getLen}|${f.getModificationTime}"
-        }
-      walk(root)
+      val root = new Path(path)
+      val prefix = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+        .makeQualified(root).toString
+      val listing = filesUnder(s, path).map(f =>
+        s"${f.getPath.toString.stripPrefix(prefix)}" +
+          s"|${f.getLen}|${f.getModificationTime}")
       val confs = s.conf.getAll.toSeq.filter { case (k, _) =>
         schemaConfs.exists(k.startsWith) }.sorted
       val md5 = java.security.MessageDigest.getInstance("MD5")
-      (listing.result().sorted ++ confs.map { case (k, v) => s"$k=$v" })
+      (listing.sorted ++ confs.map { case (k, v) => s"$k=$v" })
         .foreach(l => md5.update((l + "\n").getBytes("UTF-8")))
       prefix + "#" + md5.digest().map("%02x".format(_)).mkString
     }.toOption
+
+  /** Every file under `path` (the path itself if it is a file), walked
+    * with plain `listStatus`. Not Hadoop's recursive `listFiles`: its
+    * `LocatedFileStatus` copies each file's permissions, which the
+    * local file system loads by forking a process per file (~4 ms
+    * each; a 2000-file dir took 7 s). Throws if `path` is missing.
+    */
+  def filesUnder(s: SparkSession, path: String): Seq[FileStatus] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    def walk(p: Path): Seq[FileStatus] =
+      fs.listStatus(p).toSeq.flatMap { f =>
+        if (f.isDirectory) walk(f.getPath) else Seq(f)
+      }
+    walk(root)
+  }
 
   private val schemaConfs = Seq("spark.sql.parquet.",
     "spark.sql.legacy.parquet.", "spark.sql.caseSensitive",

@@ -82,7 +82,7 @@ object Runner {
     * and the whole HR branch (which consumes only deptOrgs + the HR
     * feeds, nothing from persons/pubs) — otherwise serialize ~140
     * tiny stage-jobs per cycle on one thread while the other cores
-    * idle (CycleProbe, round 19). Par only changes WHEN each frame
+    * idle (a job-anatomy probe, round 19). Par only changes WHEN each frame
     * materializes, never what it computes; Round20Spec pins
     * par ≡ sequential row equality.
     */

@@ -8,7 +8,7 @@ package graft.operators
   * pipeline that cuts N independent boundaries runs N sequential
   * stage-job cascades even though the cluster could back-fill — the
   * sync cycle measured ~140 sequential stage-jobs per cycle at sf0.1
-  * with most cores idle (CycleProbe, round 19). Spark's scheduler
+  * with most cores idle (a job-anatomy probe, round 19). Spark's scheduler
   * happily runs jobs from several driver threads at once; these
   * helpers fork plain daemon threads per call site (the DAG's width is
   * 2-5, so a pool would only add queueing semantics to misuse).

@@ -136,18 +136,8 @@ object Scale {
       outDir: String,
       targetBytes: Long): Int = {
     require(targetBytes > 0, s"targetBytes=$targetBytes")
-    val total = {
-      val inPath = new org.apache.hadoop.fs.Path(inDir)
-      val fs = inPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val it = fs.listFiles(inPath, true)
-      var sum = 0L
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.isFile && f.getPath.getName.endsWith(".parquet"))
-          sum += f.getLen
-      }
-      sum
-    }
+    val total = graft.Tables.filesUnder(spark, inDir)
+      .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
     val n = math.max(1L, (total + targetBytes - 1) / targetBytes).toInt
     graft.Tables.parquet(spark, inDir).repartition(n)
       .write.mode("overwrite").parquet(outDir)

@@ -886,12 +886,17 @@ object TextAnalysis {
     // an ulp (~1e-17 relative), and a 9-decimal boundary sits close
     // enough to that noise to flip a term (observed once at sf0.01);
     // at 6 decimals the boundary is ~10 orders of magnitude away.
+    // floor-based fixed point, not round(x, 6): Spark rounds the
+    // double's shortest-decimal form, DuckDB the binary value, and a
+    // fresh-seed dataset landed a score on the 6-dp boundary (seed 93,
+    // sf0.001). floor of an identical IEEE double is bit-deterministic.
     // Once the lr terms agree, everything downstream is exact decimal
     // arithmetic and one shared IEEE division — bit-stable.
+    def f6(c: Column): Column = floor(c * lit(1e6)) / lit(1e6)
     val ratios = termStats.crossJoin(broadcast(totals))
       .withColumn("lr",
-        round(log((col("ct") + lit(1.0)) / (col("__nt") + col("__v"))) -
-          log((col("cs") + lit(1.0)) / (col("__ns") + col("__v"))), 6)
+        f6(log((col("ct") + lit(1.0)) / (col("__nt") + col("__v"))) -
+          log((col("cs") + lit(1.0)) / (col("__ns") + col("__v"))))
           .cast("decimal(18,6)"))
       .select("term", "lr")
     val tf = toks(source, 0).groupBy(idCol, "term")
@@ -902,8 +907,8 @@ object TextAnalysis {
         // numerator exact (decimal Σ) then ONE double rounding before
         // the division — decimal division itself has engine-specific
         // result scales, doubles don't
-        round(sum(col("tf") * col("lr")).cast("double") /
-          sum(col("tf")), 6).as("score"))
+        f6(sum(col("tf") * col("lr")).cast("double") /
+          sum(col("tf"))).as("score"))
   }
 
   /** Unigram-LM perplexity scoring — the CCNet posture (Wenzek et al.

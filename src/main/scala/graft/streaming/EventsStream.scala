@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.StructType
 import scala.collection.mutable.ArrayBuffer
 
 /** Streaming/incremental semantics (SURVEY.md §2.10): the reference is a
@@ -24,24 +25,23 @@ object EventsStream {
   case class SessionState(start: Long, last: Long, n: Long, total: Double)
 
   /** Streaming source over a parquet events directory with the
-    * driver-testdata schema. `readStream` needs an explicit schema, so
-    * the on-disk shape is taken from a batch footer read (cheap — no
-    * data scan) rather than hard-coded: the testdata's ts column has
-    * shipped both as nanos-long and as TIMESTAMP(MICROS), and a pinned
-    * schema string breaks on regeneration. Normalization to a zoned
-    * timestamp is shared with the batch path (Tables.normalizeEventTs).
+    * driver-testdata schema. `readStream` needs an explicit schema:
+    * `schema` is the on-disk shape, taken from a footer read rather
+    * than hard-coded (the testdata's ts column has shipped both as
+    * nanos-long and as TIMESTAMP(MICROS), and a pinned schema string
+    * breaks on regeneration). Callers read it with [[graft.Tables.eventsRaw]]
+    * off a stable directory holding the same files, such as the memo
+    * dir `FeedMemo.copySlice` returns: a stream source is new every
+    * run, so its own footer read would miss the schema memo and run a
+    * job. Normalization to a zoned timestamp is shared with the batch
+    * path (Tables.normalizeEventTs).
     */
   def readEvents(
       spark: SparkSession,
       dir: String,
-      maxFilesPerTrigger: Option[Int] = None,
-      schemaHint: Option[org.apache.spark.sql.types.StructType] = None)
-      : DataFrame = {
-    // schemaHint lets a caller defining several streams over one dir
-    // (q119's two sources) pay the footer read once; it comes from
-    // Tables.eventsRaw, which also set the nanos read conf
-    val onDisk = schemaHint.getOrElse(graft.Tables.eventsRaw(spark, dir).schema)
-    val base = spark.readStream.schema(onDisk)
+      schema: StructType,
+      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+    val base = spark.readStream.schema(schema)
     val reader = maxFilesPerTrigger
       .fold(base)(n => base.option("maxFilesPerTrigger", n))
     graft.Tables.normalizeEventTs(reader.parquet(dir))

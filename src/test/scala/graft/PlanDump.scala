@@ -1,26 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` of named queries to files (round-19
   * plan-capture harness, not a test):
   *   sbt 'Test/runMain graft.PlanDump <outdir> <suffix> q1 q2 ...'
-  * Uses the Bench session shape so plans match what the bench runs.
+  * Uses the Bench session ([[Sessions]]) so plans match what the bench
+  * runs.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: PlanDump <outdir> <suffix> <queries...>")
     val (outDir, suffix, names) = (args(0), args(1), args.drop(2).toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SCRATCH_SF", "/root/testdata/sf0.1")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))

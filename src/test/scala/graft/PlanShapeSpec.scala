@@ -153,7 +153,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // 13→14 in r19: spark.sql.unionOutputPartitioning is now pinned
     // OFF in every session (Spark 4.1's union-partitioning claim is
     // invalid for concatenating unions and crashes downstream zips —
-    // see Verify.scala), so q336's dims union pays one real exchange
+    // see Sessions.scala), so q336's dims union pays one real exchange
     // it previously elided under the invalid claim
     "q336_matryoshka_eval" -> Shape(14, 6),
     "q337_pinball_eval" -> Shape(4, 1),

@@ -10,14 +10,9 @@ import org.apache.spark.sql.functions._
 object FixtureLoader {
   val dir = "src/test/resources/fixtures"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.unionOutputPartitioning", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  /** Four cores whatever the box: Round17Spec's width bound is
+    * stated against four shuffle partitions. */
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   /** One fixture file → map of stage name → DataFrame of rows. */
   def stage(fixture: String, stageName: String): DataFrame = {

@@ -21,7 +21,8 @@ class EventsStreamSpec extends AnyFunSuite {
   }
 
   test("windowed counts over the stream match the batch equivalent") {
-    val stream = EventsStream.readEvents(spark, streamDir)
+    val stream = EventsStream.readEvents(spark, streamDir,
+      graft.Tables.eventsRaw(spark, streamDir).schema)
     val g = StreamRun.toMemory(spark, "win_counts")(
       EventsStream.windowedCounts(stream).writeStream
         .outputMode(OutputMode.Append())) {
@@ -40,7 +41,8 @@ class EventsStreamSpec extends AnyFunSuite {
   }
 
   test("streaming error accumulation matches the batch rollup") {
-    val stream = EventsStream.readEvents(spark, streamDir)
+    val stream = EventsStream.readEvents(spark, streamDir,
+      graft.Tables.eventsRaw(spark, streamDir).schema)
       .filter(col("event_type") === "error")
       .select(concat(lit("e"), col("user_id")).as("error_id"), col("ts"))
       .as[ErrorsStream.ErrOccurrence]
@@ -148,7 +150,8 @@ class EventsStreamSpec extends AnyFunSuite {
   }
 
   test("stateful gap sessionization emits one state per user") {
-    val stream = EventsStream.readEvents(spark, streamDir)
+    val stream = EventsStream.readEvents(spark, streamDir,
+      graft.Tables.eventsRaw(spark, streamDir).schema)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
       .as[EventsStream.Event]
     val (gotUsers, gotEvents) = StreamRun.toMemory(spark, "sessions")(
