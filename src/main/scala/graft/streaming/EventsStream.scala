@@ -25,7 +25,7 @@ object EventsStream {
   case class SessionState(start: Long, last: Long, n: Long, total: Double)
 
   /** Streaming source over a parquet events directory with the
-    * driver-testdata schema. `readStream` needs an explicit schema:
+    * testdata events schema. `readStream` needs an explicit schema:
     * `schema` is the on-disk shape, taken from a footer read rather
     * than hard-coded (the testdata's ts column has shipped both as
     * nanos-long and as TIMESTAMP(MICROS), and a pinned schema string
