@@ -711,22 +711,22 @@ object QueriesCycle {
     // materialized cycle output), so the streaming gate's eager pins
     // overlap under par (guide §2.6) instead of running four
     // sequential checkpoint jobs per micro-batch
-    val pins: Seq[() => DataFrame] = Seq(
-      () => pin(upsert(base.existingOrgs,
+    graft.operators.Par.scope(par) { sc =>
+      val eOrgs = sc.stage("state-orgs")(pin(upsert(base.existingOrgs,
         prev.orgs.select(col("pure_uuid"), col("pure_id"),
-          col("pure_modified")), Seq("pure_uuid"))),
-      () => pin(upsert(base.existingPersons,
-        prev.persons.select(col("uuid"), col("emplid"), col("pure_uuid"),
-          col("pure_modified")), Seq("pure_uuid"))),
-      () => pin(upsert(base.existingPubs,
+          col("pure_modified")), Seq("pure_uuid"))))
+      val ePersons = sc.stage("state-persons")(pin(upsert(
+        base.existingPersons, prev.persons.select(col("uuid"),
+          col("emplid"), col("pure_uuid"), col("pure_modified")),
+        Seq("pure_uuid"))))
+      val ePubs = sc.stage("state-pubs")(pin(upsert(base.existingPubs,
         prev.pubShred.pubs.select(col("uuid"), col("pure_uuid"),
-          col("pure_modified")), Seq("pure_uuid"))),
-      () => pin(prev.umnPersonPureOrgs
+          col("pure_modified")), Seq("pure_uuid"))))
+      val pOrgs = sc.stage("state-person-orgs")(pin(prev.umnPersonPureOrgs
         .select(col("person_uuid"), col("pure_org_uuid")).distinct()))
-    val Seq(eOrgs, ePersons, ePubs, pOrgs) =
-      if (par) graft.operators.Par.all(pins: _*) else pins.map(_())
-    base.copy(existingOrgs = eOrgs, existingPersons = ePersons,
-      existingPubs = ePubs, personOrgs = pOrgs)
+      base.copy(existingOrgs = eOrgs.get, existingPersons = ePersons.get,
+        existingPubs = ePubs.get, personOrgs = pOrgs.get)
+    }
   }
 
   /** The four non-empty raw CDC buffers of the cycle-2 re-send (see

@@ -1340,14 +1340,17 @@ object QueriesStats {
       // wins and the symmetric pair counts are independent aggregates
       // of the checkpointed dp — overlap their eager materializations
       // (round 20, guide §2.6)
-      val (wins, pairs) = graft.operators.Par.par2(
-        dp.groupBy(col("winner").as("brand"))
-          .agg(sum(col("c")).as("w")).localCheckpoint(),
+      val (wins, pairs) = graft.operators.Par.scope(par = true) { sc =>
+        val wins = sc.stage("bt-wins")(dp.groupBy(col("winner").as("brand"))
+          .agg(sum(col("c")).as("w")).localCheckpoint())
         // symmetric pair counts: n_ij keyed by the UNORDERED pair
-        dp.select(least(col("winner"), col("loser")).as("a"),
+        val pairs = sc.stage("bt-pairs")(dp.select(
+            least(col("winner"), col("loser")).as("a"),
             greatest(col("winner"), col("loser")).as("b"), col("c"))
           .groupBy("a", "b").agg(sum(col("c")).as("nij"))
           .localCheckpoint())
+        (wins.get, pairs.get)
+      }
       val players = pairs.select(col("a").as("brand"))
         .unionByName(pairs.select(col("b").as("brand")))
         .unionByName(wins.select(col("brand"))).distinct()

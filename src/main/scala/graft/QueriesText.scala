@@ -1079,14 +1079,18 @@ object QueriesText {
     // the two audited pipelines are INDEPENDENT (exact ground truth vs
     // banded MinHash) but their eager checkpoints ran back-to-back on
     // one driver thread — overlap them (round 20, guide §2.6)
-    val (truth, found) = graft.operators.Par.par2(
-      Dedup.prefixJaccardJoin(Tables.documents(s, dir),
+    val (truth, found) = graft.operators.Par.scope(par = true) { sc =>
+      val truth = sc.stage("q190-truth")(Dedup.prefixJaccardJoin(
+          Tables.documents(s, dir),
           "doc_id", "text", shingleLen = 3, tauNum = 4, tauDen = 5)
-        .select("id_a", "id_b").localCheckpoint(),
-      Dedup.minhashNearDupsPortable(Tables.documents(s, dir),
+        .select("id_a", "id_b").localCheckpoint())
+      val found = sc.stage("q190-found")(Dedup.minhashNearDupsPortable(
+          Tables.documents(s, dir),
           "doc_id", "text", shingleLen = 3, numHashes = 16, bands = 4,
           threshold = 0.8)
         .select("id_a", "id_b").localCheckpoint())
+      (truth.get, found.get)
+    }
     val tp = truth.intersect(found)
     truth.agg(count(lit(1)).as("n_truth"))
       .crossJoin(found.agg(count(lit(1)).as("n_found")))

@@ -9,11 +9,18 @@ object Verify {
     // Unknown names fail loudly BEFORE the session build: a typo'd
     // filter would otherwise write nothing and exit 0, surfacing only
     // as a confusing missing-dir (or stale-compare) in check.py.
+    require(args.length >= 2, "usage: graft.Verify <sfDir> <outDir> [query...]")
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
     val unknown = only -- SparkEntry.queries.keySet
     require(unknown.isEmpty,
       s"Verify: unknown query names: ${unknown.toSeq.sorted.mkString(",")}")
+    // a missing or mistyped sfDir would otherwise fail all 340 queries
+    // one by one and still write an empty marker frame for each
+    val missing = Tables.names
+      .filterNot(t => Files.exists(Paths.get(s"$sfDir/$t.parquet")))
+    require(missing.isEmpty,
+      s"Verify: $sfDir lacks the testdata tables ${missing.mkString(",")}")
     val spark = Sessions.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -127,7 +127,7 @@ object PureDocs {
       skips: DataFrame)
 
   /** `mat` marks materializable stage boundaries (the
-    * [[PurePersons.shredInternalPersons]] convention): `fresh` (one
+    * [[PurePersons.shredInternalPersons]] convention): `withDb` (one
     * JSON parse), `personAssocsRanked` (three consumers),
     * `orgRefs` (two), `skipsAssoc` (five anti-joins). Identity by
     * default — existing callers' plans are unchanged.
@@ -159,10 +159,10 @@ object PureDocs {
     // nondeterministic uuid would mint DIFFERENT keys per action,
     // orphaning child rows. Name-based uuid from the source uuid is
     // stable across executions and collision-free per source.
-    val fresh = mat(withDb.filter(
+    val fresh = withDb.filter(
         Fns.isFresh(col("__db_modified"), col("modified")))
       .withColumn("pub_uuid",
-        coalesce(col("__db_uuid"), derivedUuid(lit("pub"), col("uuid")))))
+        coalesce(col("__db_uuid"), derivedUuid(lit("pub"), col("uuid"))))
 
     // owner org validation (pure_api_pub.py:207-225): no owner → skip;
     // owner not in org dim → skip
@@ -221,7 +221,11 @@ object PureDocs {
         lit(true).as("__org_ok"))), Seq("pure_org_uuid"), "left")
     val orgRefsM = mat(orgRefs)
 
-    val docValidity = personAssocs
+    // read off the personAssocsRanked cut: re-deriving personAssocs
+    // here re-ran its owner broadcast and person-dim join, whose AQE
+    // sort-merge → broadcast switch raced that broadcast and scheduled
+    // 5 or 6 jobs per cycle
+    val docValidity = personAssocsRanked
       .groupBy("uuid")
       .agg(
         max(when(col("person_pure_uuid").isNull, 1).otherwise(0))

@@ -63,9 +63,8 @@ object PureExternals {
         i => i.getField("value").getField("value"))))
 
     // mat boundaries (round 19): withDb feeds the stale skip AND the
-    // fresh path; fresh fans out 5+ ways (org sets, scopus sets, the
-    // person projection); skipKeys anti-joins 3 consumers — each cut
-    // stops the JSON parse/dim join above re-executing per consumer
+    // fresh path; skipKeys anti-joins 3 consumers — each cut stops the
+    // JSON parse/dim join above re-executing per consumer
     val withDb = mat(parsed.join(
       existingPersons.select(col("pure_uuid").as("uuid"),
         col("uuid").as("__db_uuid"), col("pure_modified").as("__db_modified")),
@@ -73,10 +72,10 @@ object PureExternals {
     val skipStale = withDb.filter(
         Fns.isNotFresh(col("__db_modified"), col("modified")))
       .select(col("uuid"), Fns.staleReason(col("__db_modified"), col("modified")).as("skip_reason"))
-    val fresh = mat(withDb.filter(
+    val fresh = withDb.filter(
         Fns.isFresh(col("__db_modified"), col("modified")))
       .withColumn("person_uuid", coalesce(col("__db_uuid"),
-        PureDocs.derivedUuid(lit("ext-person"), col("uuid")))))
+        PureDocs.derivedUuid(lit("ext-person"), col("uuid"))))
 
     val apiOrgs = fresh.select(col("uuid"), col("person_uuid"),
         explode_outer(col("doc.externalOrganisations").getField("uuid"))

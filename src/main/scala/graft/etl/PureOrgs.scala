@@ -55,8 +55,8 @@ object PureOrgs {
       .select(col("uuid"), col("modified"), col("doc"))
 
     // mat boundary (round 19): the fresh path and the stale-skip
-    // branch both read withDb; `base` below fans out 3 ways — without
-    // the cuts the parse+dim join re-executes once per consumer
+    // branch both read withDb — without the cut the parse+dim join
+    // re-executes once per consumer
     val withDb = mat(parsed.join(
       existingOrgs.select(col("pure_uuid").as("uuid"),
         col("pure_modified").as("__db_modified")),
@@ -72,7 +72,7 @@ object PureOrgs {
       .select(col("uuid"), Fns.staleReason(col("__db_modified"), col("modified")).as("skip_reason"))
 
     val doc = col("doc")
-    val base = mat(fresh.select(
+    val base = fresh.select(
       col("uuid").as("pure_uuid"),
       lit("Y").as("pure_internal"),
       localeEn(doc.getField("name").getField("text")).as("name_en"),
@@ -83,7 +83,7 @@ object PureOrgs {
         .as("type"),
       col("modified").as("pure_modified"),
       doc.getField("ids").as("__ids"),
-      col("modified").as("__modified")))
+      col("modified").as("__modified"))
 
     // J11: parent pure_id via self-join — the incoming batch's value
     // takes precedence; the existing dim only fills parents absent from

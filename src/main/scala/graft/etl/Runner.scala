@@ -74,70 +74,62 @@ object Runner {
     * once per downstream consumer — the reference materializes the
     * same boundaries as EDW stage tables between its subprocesses.
     *
-    * `par` overlaps INDEPENDENT boundary materializations on driver
-    * threads (guide §2.6; round 20). A non-identity mat boundary
-    * blocks its calling thread through AQE stage materialization, so
-    * sequentially-written independent sub-pipelines — the two org
-    * shredders, the two person shredders, the five pub output frames,
-    * and the whole HR branch (which consumes only deptOrgs + the HR
-    * feeds, nothing from persons/pubs) — otherwise serialize ~140
-    * tiny stage-jobs per cycle on one thread while the other cores
-    * idle (a job-anatomy probe, round 19). Par only changes WHEN each frame
-    * materializes, never what it computes; Round20Spec pins
-    * par ≡ sequential row equality.
+    * The cycle is a flat list of [[graft.operators.Par]] stages, one
+    * per boundary group, each `get`ting the stages it reads: the data
+    * dependencies alone decide what overlaps. With `par` every stage
+    * starts on its own driver thread — a non-identity mat boundary
+    * blocks its thread through AQE stage materialization, and on one
+    * thread the independent sub-pipelines (the org shredders, the
+    * person shredders, the pub outputs, the HR branch, which reads
+    * only deptOrgs and the HR feeds) serialize ~140 tiny stage-jobs
+    * while the other cores idle (a job-anatomy probe, round 19).
+    * Without `par` each stage runs on the caller's thread when first
+    * read. Every stage is joined before the cycle returns or throws;
+    * Round20Spec pins par ≡ sequential row equality.
     */
   def syncCycle(in: CycleInputs,
       mat: DataFrame => DataFrame = identity,
-      par: Boolean = false): CycleOutputs = {
-    import graft.operators.Par
-    def both[A, B](a: => A, b: => B): (A, B) =
-      if (par) Par.par2(a, b) else (a, b)
-    def matAll(dfs: (() => DataFrame)*): Seq[DataFrame] =
-      if (par) Par.all(dfs: _*) else dfs.map(_()).toSeq
+      par: Boolean = false): CycleOutputs =
+    graft.operators.Par.scope(par) { sc =>
+      import sc.stage
 
-    // 1. orgs (internal + external) — dims for everything downstream;
-    // the two shredders share no lineage, so they overlap under par
-    val ((internalOrgs, deptOrgs0, intOrgSkips),
-        (externalOrgs, extOrgSkips)) = both(
-      PureOrgs.shredOrgs(
-        PureExternals.latest(in.rawInternalOrgs), in.existingOrgs, mat),
-      PureExternals.shredExternalOrgs(
+      // 1. orgs (internal + external) — dims for everything downstream
+      val intOrgs = stage("int-orgs")(PureOrgs.shredOrgs(
+        PureExternals.latest(in.rawInternalOrgs), in.existingOrgs, mat))
+      val extOrgs = stage("ext-orgs")(PureExternals.shredExternalOrgs(
         PureExternals.latest(in.rawExternalOrgs), in.existingOrgs, mat))
-    // deptOrgs has TWO consumers (HR's dim merge + the serialized
-    // output): one boundary instead of re-running the latest-per-key
-    // fold per consumer (round 20 — it was previously mat'ed only at
-    // the output, so the HR lineage re-executed it)
-    val Seq(deptOrgs, orgs) = matAll(
-      () => mat(deptOrgs0),
-      () => mat(internalOrgs.unionByName(externalOrgs,
-        allowMissingColumns = true)))
-    val orgDim = mat(in.existingOrgs.select("pure_uuid")
-      .unionByName(orgs.select("pure_uuid")).distinct())
+      // deptOrgs has TWO consumers (HR's dim merge + the serialized
+      // output): one boundary instead of re-running the latest-per-key
+      // fold per consumer
+      val deptOrgs = stage("dept-orgs")(mat(intOrgs.get._2))
+      val orgs = stage("orgs")(mat(intOrgs.get._1.unionByName(
+        extOrgs.get._1, allowMissingColumns = true)))
+      val orgDim = stage("org-dim")(mat(in.existingOrgs.select("pure_uuid")
+        .unionByName(orgs.get.select("pure_uuid")).distinct()))
 
-    // 4. HR → sync staging (the oit_to_edw person flow) — depends only
-    // on deptOrgs and the HR feeds, so under par the whole branch
-    // (incl. its error channel and output boundaries) overlaps the
-    // person+pub shredders below. The dept→org dim merge is
-    // deterministic: a freshly shredded row always beats the existing
-    // dim row for the same deptid (dropDuplicates would pick an
-    // arbitrary winner per shuffle, making the HR derivation
-    // nondeterministic across runs).
-    def hrBranch(): (OitToEdw.SyncTables, DataFrame) = {
-      val deptOrgDim = graft.operators.Relational.latestPerKey(
-        in.deptOrg.select(col("deptid"), col("pure_org_id"))
-          .withColumn("__fresh", lit(0))
-          .unionByName(deptOrgs.select(col("deptid"), col("pure_org_id"))
-            .withColumn("__fresh", lit(1))),
-        Seq("deptid"),
-        // nulls LAST: a fresh row carrying a real org id must beat a
-        // sibling with a null pure_org_id (plain asc sorts nulls first)
-        Seq(col("__fresh").desc, col("pure_org_id").asc_nulls_last))
-        .drop("__fresh")
-      val sync = OitToEdw.personSync(in.demogHistory, in.scival,
-        in.empEntries, in.poiEntries, in.affEntries,
-        deptOrgDim,
-        in.empJobcodes, in.poiJobcodes, in.affJobcodes,
-        in.knownOverrideable, in.overrides, mat)
+      // 4. HR → sync staging (the oit_to_edw person flow) — reads only
+      // deptOrgs and the HR feeds. The dept→org dim merge is
+      // deterministic: a freshly shredded row always beats the existing
+      // dim row for the same deptid (dropDuplicates would pick an
+      // arbitrary winner per shuffle, making the HR derivation
+      // nondeterministic across runs).
+      val sync = stage("hr") {
+        val deptOrgDim = graft.operators.Relational.latestPerKey(
+          in.deptOrg.select(col("deptid"), col("pure_org_id"))
+            .withColumn("__fresh", lit(0))
+            .unionByName(deptOrgs.get.select(col("deptid"), col("pure_org_id"))
+              .withColumn("__fresh", lit(1))),
+          Seq("deptid"),
+          // nulls LAST: a fresh row carrying a real org id must beat a
+          // sibling with a null pure_org_id (plain asc sorts nulls first)
+          Seq(col("__fresh").desc, col("pure_org_id").asc_nulls_last))
+          .drop("__fresh")
+        OitToEdw.personSync(in.demogHistory, in.scival,
+          in.empEntries, in.poiEntries, in.affEntries,
+          deptOrgDim,
+          in.empJobcodes, in.poiJobcodes, in.affJobcodes,
+          in.knownOverrideable, in.overrides, mat)
+      }
       // error channel → content-addressed exception records. The
       // persons_in_dept enrichment counts the HR feed's distinct
       // persons per dept (the reference's
@@ -146,67 +138,61 @@ object Runner {
       // errorRecords fans it out into SIX filtered branches, each of
       // which would otherwise re-run the whole HR error channel
       // (measured 1.6 s of the cycle's eager breakdown at sf0.1)
-      val syncErrors = mat(sync.errors)
-      val eligible = in.empEntries.select(col("emplid"), col("deptid"))
-        .distinct()
-      val errorRecords = mat(graft.operators.Errors.errorRecords(
-        syncErrors, eligible))
+      val syncErrors = stage("hr-errors")(mat(sync.get.errors))
+      val errorRecords = stage("error-records")(mat(
+        graft.operators.Errors.errorRecords(syncErrors.get,
+          in.empEntries.select(col("emplid"), col("deptid")).distinct())))
       // every output a caller serializes is a mat boundary (round 19):
       // the N-way serialization union otherwise drags each
       // unmaterialized output's full cycle lineage into ONE plan, and
       // the driver spends seconds re-optimizing it per action
-      val Seq(personData, staffOrgAssociations, userData) = matAll(
-        () => mat(sync.personData),
-        () => mat(sync.staffOrgAssociations),
-        () => mat(sync.userData))
-      (OitToEdw.SyncTables(personData, staffOrgAssociations, userData,
-        syncErrors), errorRecords)
-    }
-    val hrForked = if (par) Some(Par.fork("hr")(hrBranch())) else None
+      val personData = stage("person-data")(mat(sync.get.personData))
+      val staffOrgAssociations =
+        stage("staff-orgs")(mat(sync.get.staffOrgAssociations))
+      val userData = stage("user-data")(mat(sync.get.userData))
 
-    // 2. persons (internal + external), validated against the org dim
-    val (internal, external) = both(
-      PurePersons.shredInternalPersons(
+      // 2. persons (internal + external), validated against the org dim
+      val internal = stage("int-persons")(PurePersons.shredInternalPersons(
         PureExternals.latest(in.rawInternalPersons),
         in.existingPersons.select("uuid", "emplid", "pure_modified"),
-        in.personOrgs, in.scopusIds, orgDim, mat),
-      PureExternals.shredExternalPersons(
+        in.personOrgs, in.scopusIds, orgDim.get, mat))
+      val external = stage("ext-persons")(PureExternals.shredExternalPersons(
         PureExternals.latest(in.rawExternalPersons),
         in.existingPersons.select("uuid", "pure_uuid", "pure_modified"),
-        in.personOrgs, in.scopusIds, orgDim, mat))
-    // external persons carry no pure_id column; align by name
-    val persons = mat(internal.persons.unionByName(external.persons,
-      allowMissingColumns = true))
-    val personDim = in.existingPersons
-      .select(col("uuid"), col("pure_uuid"), col("emplid"))
-      .unionByName(persons.select("uuid", "pure_uuid", "emplid"))
-      .dropDuplicates("pure_uuid")
+        in.personOrgs, in.scopusIds, orgDim.get, mat))
+      // external persons carry no pure_id column; align by name
+      val persons = stage("persons")(mat(internal.get.persons.unionByName(
+        external.get.persons, allowMissingColumns = true)))
+      val umnPersonPureOrgs =
+        stage("umn-person-orgs")(mat(internal.get.umnPersonPureOrgs))
 
-    // 3. publications, validated against person + org dims
-    val pubShred0 = PureDocs.shredPubs(
-      PureDocs.latestDocs(in.rawPubs), in.existingPubs, personDim, orgDim,
-      mat)
-    // output boundaries: the pub frames project wide nested-doc
-    // expression trees that would otherwise be re-optimized inside
-    // every serialization branch; skips and umnPersonPureOrgs ride the
-    // same independent-boundary group
-    val Seq(pubsM, pubPersonsM, pubPersonOrgsM, pubAuthorCollabsM,
-        authorCollabsM, skips, umnPersonPureOrgs) = matAll(
-      () => mat(pubShred0.pubs),
-      () => mat(pubShred0.pubPersons),
-      () => mat(pubShred0.pubPersonOrgs),
-      () => mat(pubShred0.pubAuthorCollabs),
-      () => mat(pubShred0.authorCollabs),
-      () => mat(internal.skips.unionByName(external.skips)
-        .unionByName(pubShred0.skips).unionByName(extOrgSkips)
-        .unionByName(intOrgSkips)),
-      () => mat(internal.umnPersonPureOrgs))
-    val pubShred = PureDocs.PubShred(pubsM, pubPersonsM, pubPersonOrgsM,
-      pubAuthorCollabsM, authorCollabsM, pubShred0.skips)
+      // 3. publications, validated against person + org dims
+      val pubShred = stage("pubs") {
+        val personDim = in.existingPersons
+          .select(col("uuid"), col("pure_uuid"), col("emplid"))
+          .unionByName(persons.get.select("uuid", "pure_uuid", "emplid"))
+          .dropDuplicates("pure_uuid")
+        PureDocs.shredPubs(PureDocs.latestDocs(in.rawPubs), in.existingPubs,
+          personDim, orgDim.get, mat)
+      }
+      // output boundaries: the pub frames project wide nested-doc
+      // expression trees that would otherwise be re-optimized inside
+      // every serialization branch
+      val pubs = stage("pubs-out")(mat(pubShred.get.pubs))
+      val pubPersons = stage("pub-persons")(mat(pubShred.get.pubPersons))
+      val pubPersonOrgs = stage("pub-orgs")(mat(pubShred.get.pubPersonOrgs))
+      val pubCollabs = stage("pub-collabs")(mat(pubShred.get.pubAuthorCollabs))
+      val collabs = stage("collabs")(mat(pubShred.get.authorCollabs))
+      val skips = stage("skips")(mat(internal.get.skips
+        .unionByName(external.get.skips).unionByName(pubShred.get.skips)
+        .unionByName(extOrgs.get._2).unionByName(intOrgs.get._3)))
 
-    val (syncTables, errorRecords) =
-      hrForked.map(_.join()).getOrElse(hrBranch())
-    CycleOutputs(syncTables, orgs, deptOrgs, persons,
-      umnPersonPureOrgs, pubShred, skips, errorRecords)
-  }
+      CycleOutputs(
+        OitToEdw.SyncTables(personData.get, staffOrgAssociations.get,
+          userData.get, syncErrors.get),
+        orgs.get, deptOrgs.get, persons.get, umnPersonPureOrgs.get,
+        PureDocs.PubShred(pubs.get, pubPersons.get, pubPersonOrgs.get,
+          pubCollabs.get, collabs.get, pubShred.get.skips),
+        skips.get, errorRecords.get)
+    }
 }

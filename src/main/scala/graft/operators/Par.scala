@@ -3,70 +3,75 @@ package graft.operators
 /** Overlap independent stage-boundary materializations (guide §2.6).
   *
   * Under AQE, a `localCheckpoint` boundary blocks its CALLING thread
-  * while every non-result query stage materializes (the adaptive plan
-  * executes shuffle/broadcast stages eagerly inside `toRdd`), so a
-  * pipeline that cuts N independent boundaries runs N sequential
-  * stage-job cascades even though the cluster could back-fill — the
-  * sync cycle measured ~140 sequential stage-jobs per cycle at sf0.1
-  * with most cores idle (a job-anatomy probe, round 19). Spark's scheduler
-  * happily runs jobs from several driver threads at once; these
-  * helpers fork plain daemon threads per call site (the DAG's width is
-  * 2-5, so a pool would only add queueing semantics to misuse).
+  * while every non-result query stage materializes, so a pipeline
+  * that cuts N independent boundaries on one thread runs N sequential
+  * stage-job cascades while the cluster could back-fill (the sync
+  * cycle: ~140 sequential stage-jobs at sf0.1 with most cores idle, a
+  * job-anatomy probe, round 19). Spark schedules jobs from several
+  * driver threads at once.
   *
-  * Concurrency is the ONLY thing these helpers change: every thunk
-  * builds exactly the frame it would have built sequentially, and
-  * callers join before using any result, so plan shapes and results
-  * are byte-identical (Round20Spec pins par ≡ sequential on the
-  * cycle). Spark thread-locals (job group/description) are inherited
-  * by the forked thread via SparkContext's InheritableThreadLocal.
+  * [[scope]] is the program's one way to run work concurrently.
+  * `stage(name)(body)` declares a stage; a stage `get`s the stages it
+  * reads, so the dependencies alone decide what overlaps. With `par`
+  * each stage starts at once on its own daemon thread (the DAG is a
+  * handful wide, so a pool would only add queueing); without it a
+  * stage runs on the caller's thread at its first `get`. The scope
+  * joins every stage it started before it returns or throws, so none
+  * outlives its caller's conf scope or the blocks the caller frees.
+  * `par` changes only WHEN a frame materializes, never its plan
+  * (Round20Spec pins par ≡ sequential on the cycle); Spark's
+  * thread-locals (local properties, job group) are inherited.
   */
 private[graft] object Par {
+  import java.util.concurrent.{ExecutionException, FutureTask}
 
-  final class Handle[T] private[Par] (th: Thread,
-      result: java.util.concurrent.atomic.AtomicReference[Either[Throwable, T]]) {
-    def join(): T = {
-      th.join()
-      result.get match {
-        case Right(v) => v
-        case Left(e) => throw e
-        case null => throw new IllegalStateException("forked thunk vanished")
+  /** A declared stage; `get` waits for its value or rethrows its failure. */
+  final class Stage[T] private[Par] (task: FutureTask[T], onCaller: Boolean) {
+    def get: T = {
+      if (onCaller) task.run() // a no-op once the body has run
+      try task.get() catch { case e: ExecutionException => throw e.getCause }
+    }
+  }
+
+  final class Scope private[Par] (par: Boolean) {
+    private val started =
+      scala.collection.mutable.ArrayBuffer.empty[(Thread, Stage[_])]
+
+    def stage[T](name: String)(body: => T): Stage[T] = {
+      val task = new FutureTask[T](() => body)
+      val st = new Stage(task, onCaller = !par)
+      if (par) {
+        val th = new Thread(task, s"graft-par-$name")
+        th.setDaemon(true)
+        th.start()
+        started.synchronized(started += th -> st)
+      }
+      st
+    }
+
+    /** Join every started stage, then throw `first` (else the first
+      * stage failure) with every other failure suppressed on it.
+      */
+    private[Par] def close(first: Option[Throwable]): Unit = {
+      val stages = started.synchronized(started.toList)
+      stages.foreach(_._1.join())
+      // distinct is by identity: a failure rethrown by `get` is seen twice
+      val failures = (first.toList ++ stages.flatMap(st =>
+        scala.util.Try(st._2.get).failed.toOption)).distinct
+      failures.headOption.foreach { e =>
+        failures.tail.foreach(e.addSuppressed)
+        throw e
       }
     }
   }
 
-  /** Start `body` on a daemon thread; `join()` re-throws its failure. */
-  def fork[T](name: String)(body: => T): Handle[T] = {
-    val ref =
-      new java.util.concurrent.atomic.AtomicReference[Either[Throwable, T]]()
-    val th = new Thread(() => {
-      ref.set(try Right(body) catch { case e: Throwable => Left(e) })
-    }, s"graft-par-$name")
-    th.setDaemon(true)
-    th.start()
-    new Handle(th, ref)
-  }
-
-  /** Evaluate both thunks concurrently (b forked, a on the caller). */
-  def par2[A, B](a: => A, b: => B): (A, B) = {
-    val hb = fork("par2")(b)
-    val av = try a catch { case e: Throwable => hb.join(); throw e }
-    (av, hb.join())
-  }
-
-  /** Evaluate all thunks concurrently (last one on the caller),
-    * results in order.
+  /** Run `body` with a fresh stage scope, joining every stage it
+    * started before returning or throwing.
     */
-  def all[T](thunks: (() => T)*): Seq[T] =
-    if (thunks.size <= 1) thunks.map(_()).toSeq
-    else {
-      val handles = thunks.init.zipWithIndex
-        .map { case (t, i) => fork(s"all$i")(t()) }
-      val last =
-        try thunks.last()
-        catch { case e: Throwable =>
-          handles.foreach(h => try h.join() catch { case _: Throwable => () })
-          throw e
-        }
-      handles.map(_.join()) :+ last
-    }
+  def scope[T](par: Boolean)(body: Scope => T): T = {
+    val sc = new Scope(par)
+    val out = try body(sc) catch { case e: Throwable => sc.close(Some(e)); throw e }
+    sc.close(None)
+    out
+  }
 }

@@ -7,10 +7,12 @@ import scala.util.matching.Regex
 /** Source scan: session conf is written only by [[Confs]] (scoped,
   * restored) and [[Tables]] (the sticky events-timestamp read conf),
   * only [[graft.streaming.StreamRun]] drains a stream, only
-  * [[Tables.parquet]] reads parquet and only [[Sessions]] builds a
-  * session — so every other query scopes its conf, stops its stream
-  * and reads a schema the same way, and every main and test runs
-  * under one session shape.
+  * [[Tables.parquet]] reads parquet, only [[Sessions]] builds a
+  * session and only [[graft.operators.Par]]'s stage scope starts a
+  * thread — so every other query scopes its conf, stops its stream
+  * and reads a schema the same way, every main and test runs under
+  * one session shape, and no thread outlives the scope that started
+  * it.
   */
 class ConfScopeSpec extends AnyFunSuite {
   /** (path under `root`, 1-based line, text) of every line. */
@@ -65,5 +67,16 @@ class ConfScopeSpec extends AnyFunSuite {
     val hits = offenders(re, Set("graft/Sessions.scala")) ++
       offenders(re, Set.empty, testLines).map("src/test/scala/" + _)
     assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("only Par's stage scope starts threads") {
+    // FeedMemo's shutdown hook runs at JVM exit, not inside a cycle
+    val threads = offenders("""new\s+Thread\s*\(""".r,
+      Set("graft/operators/Par.scala"))
+      .filterNot(h => h.startsWith("graft/FeedMemo.scala:") &&
+        h.contains("TmpTrees.delete"))
+    val unscoped = offenders("""Par\s*\.\s*(fork|par2|all)\b""".r, Set.empty)
+    assert(threads.isEmpty && unscoped.isEmpty,
+      (threads ++ unscoped).mkString("\n"))
   }
 }

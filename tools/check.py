@@ -18,6 +18,14 @@ default seed).
 import json, sys, subprocess, glob, os, datetime
 
 args = sys.argv[1:]
+# -h/--help or an unknown flag prints the usage and runs nothing: the
+# token would otherwise be taken as the sf dir and fail all 340 queries
+for k, a in enumerate(args):
+    if a.startswith("-") and a not in ("--seed", "--sf", "--edge",
+                                       "--skip-verify") and \
+            (k == 0 or args[k - 1] not in ("--seed", "--sf")):
+        print(__doc__)
+        sys.exit(2)
 seed = None
 if "--seed" in args:
     i = args.index("--seed")
